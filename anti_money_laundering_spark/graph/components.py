@@ -124,6 +124,10 @@ def connected_components(
     includes the label-sum action that materializes the round's
     checkpoint) — the drift diagnostics behind SCALE.md §CC.
 
+    Raises ``RuntimeError`` if labels still change after ``max_iter``
+    rounds (never returns unconverged labels). The round that only
+    confirms the fixpoint is not counted against ``max_iter``.
+
     ``join_rounds=True`` folds incoming labels with a left join +
     ``least`` instead of union + re-group — same min, one more shuffle
     per round (measured +20% wall on the sf0.1 identity graph), but no
@@ -282,12 +286,15 @@ def connected_components(
     # only fire on an edgeless input — where skipping it costs one
     # extra (empty, cheap) confirm round instead of an up-front
     # full-table aggregation job on EVERY run.
+    # So the fixpoint test lags one round: ``max_iter`` label-changing
+    # rounds get one more round to confirm them, and the loop raises
+    # only if labels still change in that round.
     prev_sum = None
     rounds = 0
     round_seconds: list[float] = []
 
     if frontier:
-        for _it in range(max_iter):
+        for _it in range(max_iter + 1):
             _t0 = _time.perf_counter()
             if _it == 0:
                 # Round-1 specialization (same as the legacy loop):
@@ -349,11 +356,13 @@ def connected_components(
             if new_sum == prev_sum:
                 break
             prev_sum = new_sum
+        else:
+            raise RuntimeError(f"connected_components: no fixpoint after {max_iter} rounds")
         if stats is not None:
             stats.update(rounds=rounds, round_seconds=round_seconds)
         return labels.select("id", "component")
 
-    for _it in range(max_iter):
+    for _it in range(max_iter + 1):
         _t0 = _time.perf_counter()
         # Labels seen by each vertex via incoming propagation. ROUND 1
         # SPECIALIZATION (r13 optimization round): the initial labels
@@ -430,6 +439,8 @@ def connected_components(
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
+    else:
+        raise RuntimeError(f"connected_components: no fixpoint after {max_iter} rounds")
     if stats is not None:
         stats.update(rounds=rounds, round_seconds=round_seconds)
     return labels

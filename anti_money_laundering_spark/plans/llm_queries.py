@@ -335,7 +335,8 @@ def _app_id(spark: SparkSession) -> str:
 
 def clear_shared_memos() -> None:
     """Evict ALL per-session derivation memos (LSH state, verified
-    pairs, TF-IDF weights) regardless of application. bench.py calls
+    pairs, TF-IDF weights, the linkage family's gamma table + EM fit)
+    regardless of application. bench.py calls
     this between its warmup and timed phases (r13 verdict item 3) so
     the FIRST timed pass of the memo-riding queries re-derives from the
     parquet inputs and records an honest cold figure — the memos'
@@ -343,9 +344,12 @@ def clear_shared_memos() -> None:
     checkpointed blocks, not the pipeline. The memos stay per-process
     and are rebuilt from source on the next lookup; nothing persists
     across runs."""
+    from anti_money_laundering_spark.plans import linkage_queries
+
     _LSH_SHARED.clear()
     _PAIRS_SHARED.clear()
     _TFIDF_W_SHARED.clear()
+    linkage_queries._EM_SHARED.clear()
 
 
 def _evict_dead_sessions(spark: SparkSession) -> None:

@@ -25,6 +25,10 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 for _v in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
+#: Spark's generated-class cache (see the conf in ``get_spark``)
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_secret(scope: str, key: str, default: str | None = None) -> str:
     """Secrets access (SURVEY §2.1 S11). The reference reads its API
@@ -84,6 +88,23 @@ def get_spark(
         "spark.executorEnv.OPENBLAS_NUM_THREADS": os.environ.get("OPENBLAS_NUM_THREADS", "1"),
         "spark.executorEnv.OMP_NUM_THREADS": os.environ.get("OMP_NUM_THREADS", "1"),
         "spark.executorEnv.MKL_NUM_THREADS": os.environ.get("MKL_NUM_THREADS", "1"),
+        # Generated-class cache, keyed by generated source. Spark's
+        # default of 100 classes is smaller than one pass of either
+        # perfbench workload (~400 and ~270 classes), so every pass
+        # compiled them all again. Sizing rule: the next power of two
+        # above the distinct classes one sweep of the whole catalog
+        # compiles at sf0.001 (2556 measured, 4 cores), which leaves
+        # headroom for the cache's per-segment LRU and for callers'
+        # own plans. A full sweep then holds ~250 MB of Metaspace.
+        # Static conf: it takes effect only when the session is built
+        # (the reuse path below warns when it is smaller).
+        CODEGEN_CACHE_CONF: str(CODEGEN_CACHE_ENTRIES),
+        # Whole-stage classes are named after their codegen stage id,
+        # and AQE numbers stages in the order earlier query stages
+        # complete, so an identical pipeline got a new name (and a
+        # cache miss) whenever that order changed. Without the id the
+        # source, and so the cache key, depends on the pipeline only.
+        "spark.sql.codegen.useIdInClassName": "false",
     }
     if extra_conf:
         conf.update(extra_conf)
@@ -116,6 +137,14 @@ def get_spark(
                     "stop the session to change static confs",
                     stacklevel=2,
                 )
+        live = int(active.conf.get(CODEGEN_CACHE_CONF))
+        if CODEGEN_CACHE_CONF not in (extra_conf or {}) and live < CODEGEN_CACHE_ENTRIES:
+            warnings.warn(
+                f"get_spark: live session has {CODEGEN_CACHE_CONF}={live}, below the "
+                f"engine's {CODEGEN_CACHE_ENTRIES}; every pass will recompile its "
+                "generated classes. Set it when the session is built",
+                stacklevel=2,
+            )
         return active
     for k, v in conf.items():
         builder = builder.config(k, v)

@@ -17,7 +17,10 @@ name. This module reproduces the OBSERVABLE contract of that usage:
 - **Optimistic concurrency**: two writers racing to the same version
   number — the second exclusive-create raises ``FileExistsError`` →
   surfaced as ``CommitConflict`` (Delta's ConcurrentAppendException
-  shape). The loser re-reads and retries.
+  shape). The loser re-reads and retries. A ``merge()`` after a
+  ``read(spark)`` on the same thread and handle is based on that read,
+  so a read-modify-write conflicts instead of overwriting a commit
+  that landed in between.
 - **Snapshot isolation / time travel**: ``read(spark)`` pins the
   latest committed manifest at call time; ``read(spark, version=N)``
   / ``read(spark, as_of_ts=...)`` replay any retained version.
@@ -45,6 +48,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from dataclasses import dataclass
@@ -135,6 +139,9 @@ class VersionedTable:
 
     def __init__(self, path: str) -> None:
         self.path = path
+        # per thread: the head version it last read through this
+        # handle (see merge)
+        self._head_read = threading.local()
         os.makedirs(_log_dir(path), exist_ok=True)
         os.makedirs(_data_dir(path), exist_ok=True)
 
@@ -319,6 +326,10 @@ class VersionedTable:
             ) from e
         finally:
             os.unlink(tmp)
+        # this thread's own commit right after its head read keeps
+        # that read current (nothing else landed in between)
+        if getattr(self._head_read, "version", None) == manifest.version - 1:
+            self._head_read.version = manifest.version
         return manifest.version
 
     # -- read ---------------------------------------------------------
@@ -354,6 +365,7 @@ class VersionedTable:
             version = eligible[-1]
         elif version is None:
             version = vs[-1]
+            self._head_read.version = version
         m = self._load(version)
         if prune is not None and m.files:
             m = _Manifest(**{**m.__dict__, "files": self._prune_files(m, prune)})
@@ -430,12 +442,24 @@ class VersionedTable:
         ``snapshot_version`` lets a caller that already resolved the
         head (the streaming sink, which must derive its replay ledger
         from the SAME version the commit is based on) pin it
-        explicitly; by default the current head is pinned here."""
+        explicitly. By default the current head is pinned here, and if
+        this thread read the head through this handle (``read(spark)``
+        with no version) since its last merge, that read must still be
+        the head: a ``source`` computed from it is stale once anything
+        else commits, so the merge raises :class:`CommitConflict`
+        rather than lose that commit's update. The read is used up
+        either way: a retry that does not read again pins the head."""
         from anti_money_laundering_spark.operators import merge_into
 
-        snapshot_v = (
-            snapshot_version if snapshot_version is not None else self.latest_version()
-        )
+        if snapshot_version is not None:
+            snapshot_v = snapshot_version
+        else:
+            snapshot_v = self.latest_version()
+            read_v = self._head_read.__dict__.pop("version", None)
+            if read_v is not None and read_v != snapshot_v:
+                raise CommitConflict(
+                    f"version {read_v} read by this thread is no longer the head ({snapshot_v})"
+                )
         if snapshot_v is None:
             raise FileNotFoundError(f"no committed versions at {self.path}")
         target = self.read(spark, version=snapshot_v)

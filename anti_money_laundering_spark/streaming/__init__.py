@@ -552,7 +552,17 @@ def velocity_breach_stream(
         "user_id long, event_id long, count_1h long, sum_24h_cents long, "
         "count_breach boolean, sum_breach boolean"
     )
-    state_schema = "us array<long>, cents array<long>"
+    # The buffers are held as packed little-endian int64 bytes, not
+    # array<long>: Spark encodes array state through MapObjects, whose
+    # lambda variables take fresh ids from a JVM-global counter, so
+    # every query start generated new source for the state row
+    # (de)serializers and recompiled them (5 classes a start, whatever
+    # the size of the generated-class cache). Binary state generates
+    # the same source every time, and pickles without a per-element
+    # Python int. (A checkpoint written with array<long> state must be
+    # restarted fresh: Spark refuses a changed state schema; DEPLOY.md
+    # §Streaming has the upgrade note.)
+    state_schema = "us binary, cents binary"
     src = (
         events.withWatermark("ts", late_tolerance) if evict_idle_keys else events
     )
@@ -579,8 +589,8 @@ def velocity_breach_stream(
             return
         if state.exists:
             st_us, st_cents = state.get
-            buf_us = np.asarray(st_us, dtype=np.int64)
-            buf_cents = np.asarray(st_cents, dtype=np.int64)
+            buf_us = np.frombuffer(st_us, dtype="<i8")
+            buf_cents = np.frombuffer(st_cents, dtype="<i8")
         else:
             buf_us = np.empty(0, dtype=np.int64)
             buf_cents = np.empty(0, dtype=np.int64)
@@ -602,7 +612,7 @@ def velocity_breach_stream(
         # evict: future events are >= max_us (ordered-arrival contract),
         # so only the trailing 24h relative to max_us can still matter
         keep = s_us >= (s_us[-1] - h24_us)
-        state.update((s_us[keep].tolist(), s_cents[keep].tolist()))
+        state.update((s_us[keep].astype("<i8").tobytes(), s_cents[keep].astype("<i8").tobytes()))
         if evict_idle_keys:
             # drop the key once the watermark passes last_ts + h24:
             # past that point no in-watermark event's frame can reach

@@ -102,9 +102,9 @@ def main() -> None:
             q.fn(spark, SF_DIR).count()
 
     # Protocol v4 (r14; r13 verdict item 3): evict the per-session
-    # LSH/pairs/TF-IDF derivation memos AFTER the warmups so the FIRST
-    # timed pass re-derives from the parquet inputs — its per-query
-    # times are emitted as ``cold_first_pass``. Without this the
+    # LSH/pairs/TF-IDF/linkage-EM derivation memos AFTER the warmups
+    # so the FIRST timed pass re-derives from the parquet inputs — its
+    # per-query times are emitted as ``cold_first_pass``. Without this the
     # memo-riding queries' every timed figure measures a count over
     # warm checkpointed blocks, not the pipeline. The MEDIAN stays the
     # steady-state figure (passes 2..N ride the rebuilt memo), so

@@ -63,6 +63,15 @@ def test_connected_components_long_chain_log_rounds(spark):
     assert len(cc) == 200
 
 
+def test_connected_components_raises_when_max_iter_runs_out(spark):
+    # 3 rounds cannot settle a 200-node chain: the loop must fail
+    # loudly rather than return unconverged labels
+    chain = [(i, i + 1) for i in range(1, 200)]
+    gr = g(spark, chain)
+    with pytest.raises(RuntimeError, match="connected_components: no fixpoint after 3 rounds"):
+        gr.connected_components(max_iter=3, collapse_rows=None)
+
+
 def test_connected_components_frontier_equals_legacy(spark):
     """r13 optimization: delta (frontier) propagation must reproduce the
     full-propagation loop exactly — same labels AND same round count

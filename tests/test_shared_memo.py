@@ -53,3 +53,22 @@ def test_load_table_memo_is_session_scoped(spark, sf_dir):
     sib_df.createOrReplaceTempView("__memo_sib_check")
     assert sib.sql("SELECT count(*) c FROM __memo_sib_check").collect()[0]["c"] > 0
     sib.catalog.dropTempView("__memo_sib_check")
+
+
+def test_clear_shared_memos_evicts_every_family(spark, sf_dir):
+    from anti_money_laundering_spark.plans import linkage_queries
+    from anti_money_laundering_spark.plans.catalog import get_catalog
+
+    get_catalog()["linkage_entity_clusters"].fn(spark, sf_dir).count()
+    lq._shared_verified_pairs(spark, sf_dir)
+    families = {
+        "lsh": lq._LSH_SHARED,
+        "verified_pairs": lq._PAIRS_SHARED,
+        "tfidf_weights": lq._TFIDF_W_SHARED,
+        "linkage_em": linkage_queries._EM_SHARED,
+    }
+    assert families["linkage_em"] and families["verified_pairs"]
+
+    lq.clear_shared_memos()
+
+    assert {name: len(memo) for name, memo in families.items()} == dict.fromkeys(families, 0)

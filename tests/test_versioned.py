@@ -519,6 +519,26 @@ def test_concurrent_merges_with_retry_lose_no_updates(spark):
     assert int(t.read(spark).collect()[0].v) == N_THREADS * N_MERGES
 
 
+def test_merge_after_stale_read_conflicts(spark):
+    # the read-modify-write behind the concurrent test, interleaved by
+    # hand: a commit landing between read() and merge() makes the
+    # merge conflict (it would otherwise overwrite that commit with an
+    # increment computed from the stale read)
+    t = _tbl()
+    t.write(_df(spark, [(1, "0")]))
+    cur = int(t.read(spark).collect()[0].v)
+    VersionedTable(t.path).merge(spark, _df(spark, [(1, "5")]), on=["k"])
+    with pytest.raises(CommitConflict):
+        t.merge(spark, _df(spark, [(1, str(cur + 1))]), on=["k"])
+    assert t.read(spark).collect()[0].v == "5"
+    # re-read and retry lands; so does a merge after this thread's own
+    # commit, which keeps its read current
+    cur = int(t.read(spark).collect()[0].v)
+    t.write(_df(spark, [(2, "x")]))
+    v = t.merge(spark, _df(spark, [(1, str(cur + 1))]), on=["k"])
+    assert {r.k: r.v for r in t.read(spark, version=v).collect()} == {1: "6", 2: "x"}
+
+
 def test_versioned_merge_supports_sync_mode(spark):
     # when_not_matched_by_source passes through the versioned face
     t = _tbl()
