@@ -62,11 +62,11 @@ class Graph:
         (a) vertex ids are unique, (b) endpoint closure: every edge
         src/dst appears in ``vertices``. The CC frontier fold and the
         motif id-only fast path assume both; on violating inputs they
-        return DIFFERENT results than the lenient legacy folds did
-        (a dangling endpoint gets no label row and cannot relay; a
-        duplicate vertex id emits duplicate label rows) — this makes
-        such inputs fail loudly instead of silently diverging. Raises
-        ``ValueError`` naming the first offending id."""
+        return wrong results (a dangling endpoint gets no label row and
+        cannot relay; a duplicate vertex id emits duplicate label rows),
+        where the union+groupBy folds they replaced happened to
+        tolerate them — this makes such inputs fail loudly instead.
+        Raises ``ValueError`` naming the first offending id."""
         dup = (
             self.vertices.groupBy("id")
             .agg(F.count(F.lit(1)).alias("__n"))

@@ -24,10 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from anti_money_laundering_spark.graph.components import (
-    _COLLAPSE_ID_TYPES,
-    SMALL_GRAPH_COLLAPSE_ROWS,
-)
+from anti_money_laundering_spark.graph.components import _single_task_collapse
 
 if TYPE_CHECKING:
     from anti_money_laundering_spark.graph import Graph
@@ -176,7 +173,6 @@ def betweenness(
     graph: "Graph",
     sources: Sequence,
     max_iter: int = 20,
-    collapse_rows: int | None = SMALL_GRAPH_COLLAPSE_ROWS,
 ) -> DataFrame:
     """Landmark betweenness centrality (Brandes 2001 restricted to a
     FIXED source set): for each vertex v, the sum over the given
@@ -207,15 +203,16 @@ def betweenness(
     at level >= 1, so endpoint exclusion falls out of the level
     structure. ~2 * diameter rounds total.
 
-    ``collapse_rows`` (r14; the connected_components small-graph
+    Small graphs collapse (r14; the connected_components small-graph
     collapse applied to Brandes): when the counted distinct-edge table
-    times the landmark count is at most this budget, both passes run
-    in ONE single-task vectorized pass (:func:`_brandes_collapse`)
-    instead of ~2 x diameter scheduling-floor-bound rounds. Exact same
-    level/sigma/delta arithmetic; ``None`` disables (A/B tooling).
+    times the landmark count fits ``SMALL_GRAPH_COLLAPSE_ROWS``, both
+    passes run in ONE single-task vectorized pass
+    (:func:`_brandes_collapse`) instead of ~2 x diameter
+    scheduling-floor-bound rounds. Exact same level/sigma/delta
+    arithmetic.
     """
     verts = graph.vertices.select("id")
-    acc, _ = _brandes(graph, sources, max_iter, want_edges=False, collapse_rows=collapse_rows)
+    acc, _ = _brandes(graph, sources, max_iter, want_edges=False)
     if acc is None:
         return verts.select("id", F.lit(0.0).alias("betweenness"))
     totals = acc.groupBy("v").agg(F.sum("delta").alias("betweenness"))
@@ -228,7 +225,6 @@ def edge_betweenness(
     graph: "Graph",
     sources: Sequence,
     max_iter: int = 20,
-    collapse_rows: int | None = SMALL_GRAPH_COLLAPSE_ROWS,
 ) -> DataFrame:
     """Landmark EDGE betweenness (the Girvan-Newman 2002 primitive):
     for each distinct simple edge (v, w), the summed pair-dependency
@@ -240,13 +236,13 @@ def edge_betweenness(
     sum, captured before the per-vertex aggregation, including the
     level-0 source out-edges that vertex betweenness never needs).
     Returns (src, dst, betweenness) for every distinct simple edge.
-    ``collapse_rows``: see :func:`betweenness`."""
+    Small graphs collapse as in :func:`betweenness`."""
     edges = (
         graph.edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    _, e_acc = _brandes(graph, sources, max_iter, want_edges=True, collapse_rows=collapse_rows)
+    _, e_acc = _brandes(graph, sources, max_iter, want_edges=True)
     if e_acc is None:
         return edges.select("src", "dst", F.lit(0.0).alias("betweenness"))
     totals = (
@@ -259,62 +255,57 @@ def edge_betweenness(
 
 
 def _brandes_collapse(
-    edges: DataFrame, sources_present: list[int], max_iter: int, want_edges: bool
-) -> DataFrame:
+    graph: "Graph",
+    edges: DataFrame,
+    src_list: list[int],
+    max_iter: int,
+    want_edges: bool,
+) -> DataFrame | None:
     """Exact landmark Brandes over a SMALL distinct-edge list in one
-    task (the :func:`components._collapse_small_graph` pattern): all
-    (src, dst) rows funnel into a single ``mapInPandas`` task
-    (coalesce(1) over the already-materialized checkpoint blocks — no
-    shuffle) and both passes run as vectorized per-level numpy masks —
-    identical level structure, sigma sums (integer-valued doubles,
-    order-exact) and delta/dep arithmetic as the distributed loop, so
-    the only divergence class is float SUMMATION ORDER inside a
-    delta/dep sum, the same class the Spark loop's own partial
-    aggregation already leaves unspecified (both are pinned within
-    1e-9 of textbook Brandes by tests/test_graph.py and at round(6) by
-    the catalog oracles). Distributed-safe by construction: the caller
-    gates on counted |edges| x |landmarks| work (a 100 TB edge table
-    never collapses). Returns the (s, v, delta) vertex frame or the
-    (s, v, w, dep) edge-term frame per ``want_edges``; raises the same
-    still-expanding RuntimeError as the loop when ``max_iter`` levels
-    do not exhaust a landmark's reachable set."""
+    task (work measure: |edges| x |landmarks|, since each landmark is
+    one BFS over the edge arrays — the gate is work-proportional, not
+    just size-proportional, the _widen_for_work precedent). Both
+    passes run as vectorized per-level numpy masks — identical level
+    structure, sigma sums (integer-valued doubles, order-exact) and
+    delta/dep arithmetic as the distributed loop, so the only
+    divergence class is float SUMMATION ORDER inside a delta/dep sum,
+    the same class the Spark loop's own partial aggregation already
+    leaves unspecified (both are pinned within 1e-9 of textbook
+    Brandes by tests/test_graph.py and at round(6) by the catalog
+    oracles). Returns the (s, v, delta) vertex frame or the
+    (s, v, w, dep) edge-term frame per ``want_edges``, or None when the
+    gate refuses; the task raises the same still-expanding
+    RuntimeError as the loop when ``max_iter`` levels do not exhaust a
+    landmark's reachable set."""
     dt = edges.schema["src"].dataType
-    if want_edges:
-        out_schema = T.StructType(
-            [
-                T.StructField("s", dt),
-                T.StructField("v", dt),
-                T.StructField("w", dt),
-                T.StructField("dep", T.DoubleType()),
-            ]
-        )
-    else:
-        out_schema = T.StructType(
-            [
-                T.StructField("s", dt),
-                T.StructField("v", dt),
-                T.StructField("delta", T.DoubleType()),
-            ]
+    names = ["s", "v", "w", "dep"] if want_edges else ["s", "v", "delta"]
+    out_schema = T.StructType(
+        [T.StructField(c, dt) for c in names[:-1]]
+        + [T.StructField(names[-1], T.DoubleType())]
+    )
+
+    def _present() -> tuple:
+        # Mirror the loop's frontier seeding: only landmarks present in
+        # the vertex table participate (contract: vertex ids unique).
+        return (
+            sorted(
+                int(r[0])
+                for r in graph.vertices.select("id")
+                .filter(F.col("id").isin(src_list))
+                .distinct()
+                .collect()
+            ),
         )
 
-    def _run(batches):
+    def _run(esrc, edst, sources_present):
         import numpy as np
         import pandas as pd
 
-        srcs, dsts = [], []
-        for b in batches:
-            if len(b):
-                srcs.append(b["src"].to_numpy())
-                dsts.append(b["dst"].to_numpy())
-        if not srcs:
-            return
-        esrc = np.concatenate(srcs)
-        edst = np.concatenate(dsts)
         ids, inv = np.unique(np.concatenate([esrc, edst]), return_inverse=True)
         ea, eb = inv[: len(esrc)], inv[len(esrc) :]
         n = len(ids)
         pos = {int(x): i for i, x in enumerate(ids)}
-        rows_s, rows_v, rows_w, rows_x = [], [], [], []
+        parts: list[list] = [[] for _ in names]
         for s in sources_present:
             si = pos.get(int(s))
             if si is None:
@@ -351,37 +342,22 @@ def _brandes_collapse(
                 dep = sigma[ve] / sigma[we] * (1.0 + delta[we])
                 np.add.at(delta, ve, dep)
                 if want_edges:
-                    rows_s.append(np.full(ve.shape, s, dtype=ids.dtype))
-                    rows_v.append(ids[ve])
-                    rows_w.append(ids[we])
-                    rows_x.append(dep)
+                    got = (np.full(ve.shape, s, dtype=ids.dtype), ids[ve], ids[we], dep)
+                    for part, x in zip(parts, got):
+                        part.append(x)
             if not want_edges and depth >= 2:
                 sel = (dist >= 1) & (dist <= depth - 1)
                 if sel.any():
-                    rows_s.append(np.full(int(sel.sum()), s, dtype=ids.dtype))
-                    rows_v.append(ids[sel])
-                    rows_x.append(delta[sel])
-        if not rows_s:
-            return
-        if want_edges:
-            yield pd.DataFrame(
-                {
-                    "s": np.concatenate(rows_s),
-                    "v": np.concatenate(rows_v),
-                    "w": np.concatenate(rows_w),
-                    "dep": np.concatenate(rows_x),
-                }
-            )
-        else:
-            yield pd.DataFrame(
-                {
-                    "s": np.concatenate(rows_s),
-                    "v": np.concatenate(rows_v),
-                    "delta": np.concatenate(rows_x),
-                }
-            )
+                    got = (np.full(int(sel.sum()), s, dtype=ids.dtype), ids[sel], delta[sel])
+                    for part, x in zip(parts, got):
+                        part.append(x)
+        if not parts[0]:
+            return None
+        return pd.DataFrame({c: np.concatenate(part) for c, part in zip(names, parts)})
 
-    return edges.coalesce(1).mapInPandas(_run, out_schema)
+    return _single_task_collapse(
+        edges, lambda: edges.count() * len(src_list), _run, out_schema, args=_present
+    )
 
 
 def _brandes(
@@ -389,7 +365,6 @@ def _brandes(
     sources: Sequence,
     max_iter: int,
     want_edges: bool,
-    collapse_rows: int | None = None,
 ) -> tuple[DataFrame | None, DataFrame | None]:
     """Shared Brandes passes. Returns (vertex_deltas, edge_terms):
     vertex_deltas = (s, v, delta) for interior levels >= 1;
@@ -405,28 +380,10 @@ def _brandes(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    # Small-graph collapse (r14): |edges| x |landmarks| bounds the
-    # single task's work (each landmark is one BFS over the edge
-    # arrays), so the gate is work-proportional, not just size-
-    # proportional — the _widen_for_work precedent. The count
-    # materializes checkpoint blocks the loop was about to scan anyway.
-    # Integral ids only: numpy and Spark agree on their ordering.
-    if (
-        collapse_rows is not None
-        and src_list
-        and isinstance(edges.schema["src"].dataType, _COLLAPSE_ID_TYPES)
-        and edges.count() * len(src_list) <= collapse_rows
-    ):
-        # Mirror the loop's frontier seeding: only landmarks present in
-        # the vertex table participate (contract: vertex ids unique).
-        present = sorted(
-            int(r[0])
-            for r in graph.vertices.select("id")
-            .filter(F.col("id").isin(src_list))
-            .distinct()
-            .collect()
-        )
-        acc = _brandes_collapse(edges, present, max_iter, want_edges)
+    # Small-graph collapse (r14); the count materializes checkpoint
+    # blocks the loop was about to scan anyway.
+    acc = _brandes_collapse(graph, edges, src_list, max_iter, want_edges) if src_list else None
+    if acc is not None:
         # Materialize eagerly: the loop path already runs its forward
         # pass at call time (per-round isEmpty actions), and its
         # still-expanding guard raises a driver-side RuntimeError —
@@ -1207,18 +1164,19 @@ def weighted_sssp(
 
 def _densest_peel_collapse(
     und: DataFrame, verts: DataFrame, eps: float, max_rounds: int
-) -> list[tuple]:
-    """Exact peel trajectory of a SMALL graph in one task (the
-    small-graph-collapse pattern): edge and vertex rows funnel into a
-    single ``mapInPandas`` task tagged apart by a boolean column (no
-    NULL ids — a nullable int column would arrive as float64 and lose
-    precision past 2^53), and the peel runs as vectorized membership
-    masks. Arithmetic is IDENTICAL to the distributed loop: integer
+) -> list[tuple] | None:
+    """Exact peel trajectory of a SMALL graph in one task (work
+    measure: |E| + |V| rows): edge and vertex rows funnel into the
+    single task tagged apart by a boolean column (no NULL ids — a
+    nullable int column would arrive as float64 and lose precision
+    past 2^53), and the peel runs as vectorized membership masks.
+    Arithmetic is IDENTICAL to the distributed loop: integer
     |V|/|E|/degree counts, rho = the same python float division, the
     same deg > 2(1+eps)rho double comparison — so the trajectory is
     bit-equal, not merely close (pinned by
     tests/test_graph.py::test_densest_peel_matches_python_simulation,
-    which both paths must satisfy exactly)."""
+    which both paths must satisfy exactly). None when the gate
+    refuses."""
     tagged = und.select("a", "b", F.lit(False).alias("__isv")).unionByName(
         verts.select(
             F.col("id").alias("a"), F.col("id").alias("b"), F.lit(True).alias("__isv")
@@ -1233,21 +1191,10 @@ def _densest_peel_collapse(
         ]
     )
 
-    def _run(batches):
+    def _run(A, B, isv):
         import numpy as np
         import pandas as pd
 
-        a_p, b_p, v_p = [], [], []
-        for batch in batches:
-            if len(batch):
-                a_p.append(batch["a"].to_numpy())
-                b_p.append(batch["b"].to_numpy())
-                v_p.append(batch["__isv"].to_numpy())
-        if not a_p:
-            return
-        A = np.concatenate(a_p)
-        B = np.concatenate(b_p)
-        isv = np.concatenate(v_p)
         vert_ids = np.unique(A[isv])
         ea_raw, eb_raw = A[~isv], B[~isv]
         ids = np.unique(np.concatenate([vert_ids, ea_raw, eb_raw]))
@@ -1270,19 +1217,20 @@ def _densest_peel_collapse(
             np.add.at(deg, ea[em], 1)
             np.add.at(deg, eb[em], 1)
             active = active & (deg > 2.0 * (1.0 + eps) * rho)
-        if rows:
-            yield pd.DataFrame(
-                {
-                    "round": np.array([r[0] for r in rows], dtype=np.int32),
-                    "n_vertices": np.array([r[1] for r in rows], dtype=np.int64),
-                    "n_edges": np.array([r[2] for r in rows], dtype=np.int64),
-                    "rho": np.array([r[3] for r in rows], dtype=np.float64),
-                }
-            )
+        if not rows:
+            return None
+        return pd.DataFrame(rows, columns=["round", "n_vertices", "n_edges", "rho"]).astype(
+            {"round": np.int32, "n_vertices": np.int64, "n_edges": np.int64}
+        )
 
-    got = tagged.coalesce(1).mapInPandas(_run, out_schema).collect()
+    got = _single_task_collapse(
+        tagged, lambda: und.count() + verts.count(), _run, out_schema
+    )
+    if got is None:
+        return None
     return sorted(
-        (int(r.round), int(r.n_vertices), int(r.n_edges), float(r.rho)) for r in got
+        (int(r.round), int(r.n_vertices), int(r.n_edges), float(r.rho))
+        for r in got.collect()
     )
 
 
@@ -1290,7 +1238,6 @@ def densest_subgraph_peel(
     graph: "Graph",
     eps: float = 0.5,
     max_rounds: int = 6,
-    collapse_rows: int | None = SMALL_GRAPH_COLLAPSE_ROWS,
 ) -> list[tuple]:
     """Parallel densest-subgraph peel (Bahmani-Kumar-Vassilvitskii,
     VLDB 2012): repeatedly delete every vertex whose degree is at most
@@ -1310,24 +1257,21 @@ def densest_subgraph_peel(
     witness; callers re-derive its vertex set by re-running the peel
     or capturing ``subgraphs`` via the optional out-param.
 
-    ``collapse_rows`` (r14, the small-graph-collapse pattern): when the
-    counted undirected edge table plus the vertex table fits the
-    budget, the whole trajectory is computed in ONE single-task
-    vectorized pass (:func:`_densest_peel_collapse`) instead of
-    ~3 jobs x rounds of scheduling floor; integer counts and the same
-    python-float rho make the trajectory bit-equal to the loop's.
-    ``None`` disables (A/B tooling). The function is eager either way
-    (it returns driver-side rows)."""
+    Small graphs collapse (r14, the small-graph-collapse pattern): when
+    the counted undirected edge table plus the vertex table fits
+    ``SMALL_GRAPH_COLLAPSE_ROWS``, the whole trajectory is computed in
+    ONE single-task vectorized pass (:func:`_densest_peel_collapse`)
+    instead of ~3 jobs x rounds of scheduling floor; integer counts
+    and the same python-float rho make the trajectory bit-equal to the
+    loop's. The function is eager either way (it returns driver-side
+    rows)."""
     if not 0.0 < eps:
         raise ValueError(f"densest_subgraph_peel: eps must be > 0, got {eps}")
     und = _canonical_undirected(graph.edges).localCheckpoint(eager=False)
     s = graph.vertices.select("id").localCheckpoint(eager=False)
-    if (
-        collapse_rows is not None
-        and isinstance(und.schema["a"].dataType, _COLLAPSE_ID_TYPES)
-        and und.count() + s.count() <= collapse_rows
-    ):
-        return _densest_peel_collapse(und, s, eps, max_rounds)
+    collapsed = _densest_peel_collapse(und, s, eps, max_rounds)
+    if collapsed is not None:
+        return collapsed
     rows: list[tuple] = []
     for i in range(max_rounds):
         e = (

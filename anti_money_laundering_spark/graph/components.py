@@ -21,7 +21,7 @@ Scale posture:
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -30,14 +30,18 @@ from pyspark.sql import types as T
 if TYPE_CHECKING:
     from anti_money_laundering_spark.graph import Graph
 
-#: Default edge-row budget (bidirectional rows = 2|E|) below which the
-#: whole fixpoint is replaced by ONE single-task vectorized pass
-#: (r14 optimization round; guide §1.2 "the distributed algorithm" /
-#: §2.6 scheduling floors). Sized for worker memory, not speed: 2M
-#: int64 pairs are ~32 MB of Arrow batches plus a few transient numpy
+#: Row budget of the small-graph collapse: a graph whose counted work
+#: measure is at most this many rows is solved in ONE single-task
+#: vectorized pass instead of an iterative distributed loop (r14
+#: optimization round; guide §1.2 "the distributed algorithm" / §2.6
+#: scheduling floors). Sized for worker memory, not speed: 2M int64
+#: pairs are ~32 MB of Arrow batches plus a few transient numpy
 #: copies (sort + inverse) — comfortably inside a default Python
-#: worker. Above it, per-round shuffles dominate the scheduling floor
-#: and the distributed loop is the right shape anyway.
+#: worker. Rows bound bytes too: the id-type gate admits only integral
+#: ids of at most 8 bytes, so an edge row carries at most 16 B of ids.
+#: Above the budget, per-round shuffles dominate the scheduling floor
+#: and the distributed loop is the right shape anyway. The gate reads
+#: this constant at call time.
 SMALL_GRAPH_COLLAPSE_ROWS = 2_000_000
 
 #: Integral id types the single-task collapse handles: numpy's sort
@@ -47,35 +51,61 @@ SMALL_GRAPH_COLLAPSE_ROWS = 2_000_000
 _COLLAPSE_ID_TYPES = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
 
 
-def _collapse_small_graph(bi: DataFrame) -> DataFrame:
-    """Exact min-label connected components of a SMALL edge list in one
-    task: all (src, dst) rows are funneled into a single mapInPandas
-    task (coalesce(1) over the already-materialized checkpoint blocks —
-    no shuffle) and solved with vectorized min-label propagation +
-    full pointer compression per pass (O(|E|) numpy work per pass,
-    O(log n) passes). Returns (id, component = min member id) for every
-    vertex incident to an edge; isolated vertices are the caller's
-    left-join fold. Distributed-safe by construction: the caller gates
-    on a counted row budget (SMALL_GRAPH_COLLAPSE_ROWS), so the task's
-    memory is bounded no matter what the full dataset size is."""
-    dt = bi.schema["src"].dataType
-    out_schema = T.StructType(
-        [T.StructField("id", dt), T.StructField("component", dt)]
-    )
+def _single_task_collapse(
+    frame: DataFrame,
+    size: Callable[[], int],
+    kernel: Callable,
+    schema: T.StructType,
+    args: Callable[[], tuple] = tuple,
+) -> DataFrame | None:
+    """The small-graph collapse gate of CC, landmark Brandes and the
+    densest peel. If ``frame``'s first column (a vertex id) has a
+    ``_COLLAPSE_ID_TYPES`` type and the counted work ``size()`` fits
+    SMALL_GRAPH_COLLAPSE_ROWS, returns ``frame`` funneled into ONE
+    ``mapInPandas`` task (coalesce(1) over checkpointed blocks — no
+    shuffle) calling ``kernel(*column_arrays, *args())`` once, which
+    returns a pandas frame of ``schema`` or None; else None, and the
+    caller runs its distributed loop. ``args`` (driver-side kernel
+    inputs) runs only once the gate admits. The counted budget bounds
+    the task's memory whatever the dataset size."""
+    if not isinstance(frame.schema.fields[0].dataType, _COLLAPSE_ID_TYPES):
+        return None
+    if size() > SMALL_GRAPH_COLLAPSE_ROWS:
+        return None
+    cols = frame.columns
+    extra = args()
 
-    def _unionfind(batches):
+    def _run(batches):
+        import numpy as np
+
+        parts: list[list] = [[] for _ in cols]
+        for b in batches:
+            if len(b):
+                for part, c in zip(parts, cols):
+                    part.append(b[c].to_numpy())
+        if parts[0]:
+            out = kernel(*(np.concatenate(part) for part in parts), *extra)
+            if out is not None:
+                yield out
+
+    return frame.coalesce(1).mapInPandas(_run, schema)
+
+
+def _collapse_small_graph(bi: DataFrame) -> DataFrame | None:
+    """Exact min-label connected components of a SMALL bidirectional
+    edge list (work measure: its 2|E| rows) in one task, solved with
+    vectorized min-label propagation + full pointer compression per
+    pass (O(|E|) numpy work per pass, O(log n) passes). Returns (id,
+    component = min member id) for every vertex incident to an edge;
+    isolated vertices are the caller's left-join fold. None when the
+    gate refuses."""
+    dt = bi.schema["src"].dataType
+    out_schema = T.StructType([T.StructField(c, dt) for c in ("id", "component")])
+
+    def _unionfind(src, dst):
         import numpy as np
         import pandas as pd
 
-        srcs, dsts = [], []
-        for b in batches:
-            if len(b):
-                srcs.append(b["src"].to_numpy())
-                dsts.append(b["dst"].to_numpy())
-        if not srcs:
-            return
-        src = np.concatenate(srcs)
-        dst = np.concatenate(dsts)
         ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
         ea, eb = inv[: len(src)], inv[len(src) :]
         # ids is sorted ascending, so index order == id order and the
@@ -96,22 +126,17 @@ def _collapse_small_graph(bi: DataFrame) -> DataFrame:
                 label = nl
             if np.array_equal(label, before):
                 break
-        yield pd.DataFrame({"id": ids, "component": ids[label]})
+        return pd.DataFrame({"id": ids, "component": ids[label]})
 
-    return bi.coalesce(1).mapInPandas(_unionfind, out_schema)
+    return _single_task_collapse(bi, bi.count, _unionfind, out_schema)
 
 
 def connected_components(
     graph: "Graph",
     max_iter: int = 100,
     stats: dict | None = None,
-    join_rounds: bool = False,
-    edge_storage: str = "bi",
-    frontier: bool = True,
     dedup_edges: bool = True,
     dedup_vertices: bool = True,
-    collapse_rows: int | None = SMALL_GRAPH_COLLAPSE_ROWS,
-    validate: bool = False,
 ) -> DataFrame:
     """Return ``(id, component)`` with component = min id reachable.
 
@@ -128,46 +153,35 @@ def connected_components(
     rounds (never returns unconverged labels). The round that only
     confirms the fixpoint is not counted against ``max_iter``.
 
-    ``join_rounds=True`` folds incoming labels with a left join +
-    ``least`` instead of union + re-group — same min, one more shuffle
-    per round (measured +20% wall on the sf0.1 identity graph), but no
-    Union node: Catalyst's Union constraint rewrite crashes
-    (key-not-found at localCheckpoint) when the loop's inputs are
-    themselves checkpointed LogicalRDDs carrying join-derived
-    constraints, which is exactly what :func:`bipartite_components`
-    feeds it. Default stays the faster union form.
+    The bidirectional edge table (2|E| rows) is checkpointed once and
+    every round scans the cached blocks, so the edge-side distinct
+    shuffle is paid exactly once. ``localCheckpoint`` does NOT
+    preserve hash partitioning through the DataFrame API (the
+    checkpointed side re-Exchanges in every round's join regardless of
+    a pre-``repartition``); the per-round shuffle model is in
+    SCALE.md §CC.
 
-    ``edge_storage`` picks how the per-round bidirectional edge input
-    is held (r6 verdict item 6; A/B numbers in SCALE.md §CC):
+    Small-graph collapse (r14 optimization round; guide §1.2/§2.6):
+    when that table's counted row count fits
+    ``SMALL_GRAPH_COLLAPSE_ROWS``, the whole fixpoint is ONE
+    single-task vectorized pass (:func:`_collapse_small_graph`): the
+    loop's per-round cost at this size is almost entirely the per-job
+    scheduling floor (~0.25 s/round on the bench box), so a 13-round
+    chain-graph fixpoint pays ~3 s to move kilobytes. The collapse is
+    scale-adaptive, not fixture-tuned: a 100 TB edge table fails the
+    gate and runs the distributed loop, and the gate counts the
+    just-checkpointed edge blocks (one cheap scan the loop was about
+    to materialize anyway). Labels are identical by construction
+    (same min-label semantics; equality with the loop pinned in
+    tests/test_graph.py). Only integral id types take the fast path
+    (numpy vs Spark ordering is provably identical there; strings can
+    collate differently). ``stats`` gets ``rounds=0, collapsed=True``.
 
-    - ``"bi"`` (default): checkpoint the materialized bidirectional
-      table (2|E| rows) once; every round scans the cached blocks.
-      The edge-side distinct shuffle is paid exactly once.
-    - ``"recompute"``: no checkpoint; re-derive
-      filter+distinct+union from the source every round, paying the
-      distinct's full edge shuffle PER ROUND. Kept for the A/B
-      harness (tools/ab_cc_edges.py) and for memory-starved callers
-      that prefer recompute over caching 2|E| rows.
-
-    A third variant — checkpoint only the DIRECTED |E| rows and union
-    the reversal lazily per round, halving the cached footprint — is
-    NOT offered: a Union over a checkpointed LogicalRDD plus its own
-    projection trips Catalyst's union-constraint rewrite
-    (``key not found`` at the loop's next localCheckpoint) in every
-    join mode on this Spark version, the same defect class the
-    ``join_rounds`` docstring pins. Revisit if that rewrite is fixed.
-
-    Note ``localCheckpoint`` does NOT preserve hash partitioning
-    through the DataFrame API (the checkpointed side re-Exchanges in
-    every round's join regardless of a pre-``repartition``), so
-    storage choice changes bytes HELD, not bytes SHUFFLED; the
-    per-round shuffle model is in SCALE.md §CC.
-
-    ``frontier=True`` (default; r13 optimization round, guide §2.3
-    "shuffle fewer bytes") switches rounds 2+ to DELTA propagation:
-    only vertices whose label changed last round re-send. Soundness
-    invariant (induction): round 1 delivers every initial label to
-    every neighbor (min(src) over the full bidirectional edge set);
+    The loop is DELTA (frontier) propagation (r13 optimization round,
+    guide §2.3 "shuffle fewer bytes"): after round 1, only vertices
+    whose label changed last round re-send. Soundness invariant
+    (induction): round 1 delivers every initial label to every
+    neighbor (min(src) over the full bidirectional edge set);
     afterwards, a vertex whose label did NOT change in round k already
     delivered its current label in some round <= k, so each neighbor
     folded it into its own min then — re-sending is a no-op. The
@@ -178,94 +192,61 @@ def connected_components(
     label TRAJECTORY (and so the round count and final labels) is
     identical to full re-propagation. A contract-VIOLATING dangling
     intermediate vertex (present in edges, absent from vertices) never
-    gets a label row here and cannot relay, where the legacy
-    union+groupBy fold happened to create one — closure is the
-    caller's obligation either way, as it already was for the hop-1
-    specialization. What changes is per-round cost: the message join
-    touches frontier-adjacent edges instead of all 2|E|, and the fold
-    back into the label table is a left join against the (small)
-    incoming-min aggregate instead of a full-label union+regroup, so
-    once the frontier collapses a round shuffles ~nothing. Implemented
-    join-shaped (no Union node), so it is also immune to the Catalyst
-    union-constraint crash class above; ``join_rounds`` is moot in
-    this mode. ``frontier=False`` keeps the historical full-propagation
-    loop for A/B tooling.
+    gets a label row here and cannot relay, where the full-propagation
+    union+groupBy fold this loop replaced happened to create one —
+    closure is the caller's obligation (``Graph.validate`` checks it).
+    Per-round cost: the message join touches frontier-adjacent edges
+    instead of all 2|E|, and the fold back into the label table is a
+    left join against the (small) incoming-min aggregate instead of a
+    full-label union+regroup, so once the frontier collapses a round
+    shuffles ~nothing.
+
+    The loop is join-shaped, with no Union node, on purpose:
+    Catalyst's Union constraint rewrite crashes (key-not-found at the
+    next localCheckpoint) when a loop's inputs are themselves
+    checkpointed LogicalRDDs carrying join-derived constraints, which
+    is exactly what :func:`bipartite_components` feeds it. The same
+    defect rules out halving the cached edge footprint by
+    checkpointing only the DIRECTED |E| rows and unioning the reversal
+    lazily per round: a Union over a checkpointed LogicalRDD plus its
+    own projection trips the rewrite in every join mode on this Spark
+    version. Revisit if that rewrite is fixed.
 
     ``dedup_edges`` / ``dedup_vertices`` (r13 optimization round):
     repeated EDGES only repeat a message into a min — always harmless —
-    so ``dedup_edges`` is purely a size optimization. Repeated VERTEX
-    ids are only collapsed by the legacy union+groupBy fold; the
-    default frontier fold (a left join from the label table) would
-    emit one output row per duplicate, so ``dedup_vertices=False``
-    additionally REQUIRES unique vertex ids from the caller. Callers
-    whose inputs satisfy these contracts by construction (verified
-    near-dup pairs with id_a < id_b over endpoint-derived vertices,
-    an already-distinct projection) pass False and
-    skip one full-input shuffle each; the near-dup cluster graphs are
-    tiny relative to their corpus, so at fixture scale these shuffles
-    WERE the cost. Defaults stay True: at 100 TB an edge table with
-    heavy duplicate structure should shrink once before being iterated.
-
-    ``collapse_rows`` (r14 optimization round; guide §1.2/§2.6): when
-    the bidirectional edge table is SMALL — its counted row count is at
-    most this budget — the whole fixpoint is replaced by ONE
-    single-task vectorized pass (:func:`_collapse_small_graph`): the
-    iterative loop's per-round cost at this size is almost entirely the
-    per-job scheduling floor (~0.25 s/round on the bench box), so a
-    13-round chain-graph fixpoint pays ~3 s to move kilobytes. The
-    collapse is scale-adaptive, not fixture-tuned: a 100 TB edge table
-    fails the gate and runs the distributed loop unchanged, and the
-    gate is an exact count of the just-checkpointed edge blocks (one
-    cheap scan the loop was about to materialize anyway). Labels are
-    identical by construction (same min-label semantics; equality
-    pinned in tests/test_graph.py against both loop modes). Only
-    integral id types take the fast path (numpy vs Spark ordering is
-    provably identical there; strings can collate differently).
-    ``stats`` gets ``rounds=0, collapsed=True``. ``None`` disables (the
-    A/B and round-instrumentation tools do this);
-    ``edge_storage="recompute"`` also skips it, since the collapse
-    wants the counted, materialized checkpoint blocks.
-
-    ``validate=True`` (r14, opt-in debug guard): assert the Graph
-    contract — unique vertex ids and endpoint closure — with two cheap
-    aggregation jobs before running, raising ``ValueError`` on
-    violation. The frontier fold and the motif id-only fast path
-    silently produce different results on contract-violating inputs
-    than the lenient legacy folds did; this flag makes such inputs fail
-    loudly instead. Default off (two extra jobs per call).
+    so ``dedup_edges`` is purely a size optimization. The loop's fold
+    (a left join from the label table) emits one output row per
+    repeated VERTEX id, so ``dedup_vertices=False`` additionally
+    REQUIRES unique vertex ids from the caller. Callers whose inputs
+    satisfy these contracts by construction (verified near-dup pairs
+    with id_a < id_b over endpoint-derived vertices, an
+    already-distinct projection) pass False and skip one full-input
+    shuffle each; the near-dup cluster graphs are tiny relative to
+    their corpus, so at fixture scale these shuffles WERE the cost.
+    Defaults stay True: at 100 TB an edge table with heavy duplicate
+    structure should shrink once before being iterated.
     """
     import time as _time
-    if validate:
-        graph.validate()
+
     edges = graph.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     if dedup_edges:
         edges = edges.distinct()
     # Undirected: propagate labels both ways.
-    bi = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    if edge_storage == "bi":
-        bi = bi.localCheckpoint(eager=False)
-    elif edge_storage != "recompute":
-        raise ValueError(f"unknown edge_storage: {edge_storage!r} (bi|recompute)")
+    bi = edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).localCheckpoint(eager=False)
 
     vertex_ids = graph.vertices.select("id")
     if dedup_vertices:
         vertex_ids = vertex_ids.distinct()
 
-    # Small-graph collapse (see docstring): count the materialized
-    # bidirectional checkpoint; at or under budget, solve in one task.
-    if (
-        collapse_rows is not None
-        and edge_storage == "bi"
-        and isinstance(bi.schema["src"].dataType, _COLLAPSE_ID_TYPES)
-        and bi.count() <= collapse_rows
-    ):
-        comp_map = _collapse_small_graph(bi)
-        out = vertex_ids.join(comp_map, "id", "left").select(
-            "id", F.coalesce("component", F.col("id")).alias("component")
-        )
+    comp_map = _collapse_small_graph(bi)
+    if comp_map is not None:
         if stats is not None:
             stats.update(rounds=0, round_seconds=[], collapsed=True)
-        return out
+        return vertex_ids.join(comp_map, "id", "left").select(
+            "id", F.coalesce("component", F.col("id")).alias("component")
+        )
 
     labels = vertex_ids.withColumn("component", F.col("id"))
     # lazy: round 1 is the materializing action — init runs ZERO jobs
@@ -293,120 +274,39 @@ def connected_components(
     rounds = 0
     round_seconds: list[float] = []
 
-    if frontier:
-        for _it in range(max_iter + 1):
-            _t0 = _time.perf_counter()
-            if _it == 0:
-                # Round-1 specialization (same as the legacy loop):
-                # initial labels are the identity map, so min(src) per
-                # dst IS the round-1 incoming minimum — no label join,
-                # and it delivers EVERY initial label to every
-                # neighbor, which is what the frontier induction
-                # needs as its base case.
-                incoming_min = bi.groupBy(F.col("dst").alias("id")).agg(
-                    F.min("src").alias("__inc")
-                )
-            else:
-                fr = labels.filter("changed").select(
-                    F.col("id").alias("__fid"), F.col("component").alias("__fcomp")
-                )
-                incoming_min = (
-                    bi.join(fr, bi.src == F.col("__fid"))
-                    .groupBy(F.col("dst").alias("id"))
-                    .agg(F.min("__fcomp").alias("__inc"))
-                )
-            # Fold messages back: new label = min(old, incoming);
-            # changed = strictly lowered this round. `component` here
-            # is the OLD label (incoming_min carries only __inc).
-            new_labels = labels.join(incoming_min, "id", "left").select(
-                "id",
-                F.least(F.coalesce("__inc", "component"), "component").alias(
-                    "component"
-                ),
-                (F.col("__inc").isNotNull() & (F.col("__inc") < F.col("component"))).alias(
-                    "changed"
-                ),
-            )
-            # Pointer jumping, alternate rounds (see the legacy loop's
-            # rationale); a jump-lowered label joins the frontier.
-            if _it % 2 == 1:
-                parent = new_labels.select(
-                    F.col("id").alias("__pid"), F.col("component").alias("__pcomp")
-                )
-                new_labels = (
-                    new_labels.join(
-                        parent, new_labels.component == F.col("__pid"), "left"
-                    ).select(
-                        "id",
-                        F.coalesce("__pcomp", "component").alias("component"),
-                        (
-                            F.col("changed")
-                            | (
-                                F.col("__pcomp").isNotNull()
-                                & (F.col("__pcomp") < F.col("component"))
-                            )
-                        ).alias("changed"),
-                    )
-                )
-            new_labels = new_labels.localCheckpoint(eager=False)
-            new_sum = _label_sum(new_labels)
-            labels = new_labels
-            rounds += 1
-            round_seconds.append(round(_time.perf_counter() - _t0, 3))
-            if new_sum == prev_sum:
-                break
-            prev_sum = new_sum
-        else:
-            raise RuntimeError(f"connected_components: no fixpoint after {max_iter} rounds")
-        if stats is not None:
-            stats.update(rounds=rounds, round_seconds=round_seconds)
-        return labels.select("id", "component")
-
     for _it in range(max_iter + 1):
         _t0 = _time.perf_counter()
-        # Labels seen by each vertex via incoming propagation. ROUND 1
-        # SPECIALIZATION (r13 optimization round): the initial labels
-        # are the identity map, so joining the edge table against them
-        # is a no-op that still shuffles the full 2|E| edge set once on
-        # src and once more for the join — the source's label IS its
-        # id. Substituting src for the joined label removes one
-        # edge-scale shuffle + join from every CC run at any scale.
-        # Sound under the Graph endpoint-closure invariant (edges'
-        # endpoints ⊆ vertices — the same contract
-        # Graph.aggregate_messages trusts when it skips vertex joins);
-        # a dangling-src edge would now propagate its raw src id where
-        # the join used to drop it, so closure is the caller's
-        # contract, as it already was for aggregate_messages.
-        if join_rounds:
-            if _it == 0:
-                incoming_min = bi.groupBy(F.col("dst").alias("id")).agg(
-                    F.min("src").alias("__inc")
-                )
-            else:
-                incoming_min = (
-                    bi.join(labels, bi.src == labels.id)
-                    .groupBy(F.col("dst").alias("id"))
-                    .agg(F.min("component").alias("__inc"))
-                )
-            new_labels = labels.join(incoming_min, "id", "left").select(
-                "id",
-                F.least(F.coalesce("__inc", "component"), "component").alias("component"),
+        if _it == 0:
+            # Round-1 specialization (r13 optimization round): initial
+            # labels are the identity map, so min(src) per dst IS the
+            # round-1 incoming minimum — no label join (which would
+            # shuffle the full 2|E| edge set twice), and it delivers
+            # EVERY initial label to every neighbor, which is what the
+            # frontier induction needs as its base case.
+            incoming_min = bi.groupBy(F.col("dst").alias("id")).agg(
+                F.min("src").alias("__inc")
             )
         else:
-            if _it == 0:
-                incoming = bi.select(
-                    F.col("dst").alias("id"), F.col("src").alias("component")
-                )
-            else:
-                incoming = bi.join(labels, bi.src == labels.id).select(
-                    F.col("dst").alias("id"), F.col("component")
-                )
-            new_labels = (
-                labels.select("id", "component")
-                .union(incoming)
-                .groupBy("id")
-                .agg(F.min("component").alias("component"))
+            fr = labels.filter("changed").select(
+                F.col("id").alias("__fid"), F.col("component").alias("__fcomp")
             )
+            incoming_min = (
+                bi.join(fr, bi.src == F.col("__fid"))
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min("__fcomp").alias("__inc"))
+            )
+        # Fold messages back: new label = min(old, incoming);
+        # changed = strictly lowered this round. `component` here
+        # is the OLD label (incoming_min carries only __inc).
+        new_labels = labels.join(incoming_min, "id", "left").select(
+            "id",
+            F.least(F.coalesce("__inc", "component"), "component").alias(
+                "component"
+            ),
+            (F.col("__inc").isNotNull() & (F.col("__inc") < F.col("component"))).alias(
+                "changed"
+            ),
+        )
         # Pointer jumping: component ids are themselves vertex ids with
         # labels, and labels only decrease — so label(label(u)) <=
         # label(u). The shortcut join halves label-chain lengths,
@@ -417,20 +317,31 @@ def connected_components(
         # while low-diameter graphs — where jumping never fires
         # usefully, e.g. the bipartite identity graph's star-shaped
         # components — skip a third of their per-round shuffles
-        # (sf0.1: 2.2 s → 1.9 s, rounds unchanged at 5).
+        # (sf0.1: 2.2 s → 1.9 s, rounds unchanged at 5). A
+        # jump-lowered label joins the frontier.
         if _it % 2 == 1:
             parent = new_labels.select(
                 F.col("id").alias("__pid"), F.col("component").alias("__pcomp")
             )
             new_labels = (
-                new_labels.join(parent, new_labels.component == F.col("__pid"), "left")
-                .select("id", F.coalesce("__pcomp", "component").alias("component"))
+                new_labels.join(
+                    parent, new_labels.component == F.col("__pid"), "left"
+                ).select(
+                    "id",
+                    F.coalesce("__pcomp", "component").alias("component"),
+                    (
+                        F.col("changed")
+                        | (
+                            F.col("__pcomp").isNotNull()
+                            & (F.col("__pcomp") < F.col("component"))
+                        )
+                    ).alias("changed"),
+                )
             )
         # Lazy checkpoint + fixpoint agg = ONE job per round: the sum
         # action materializes the checkpoint blocks, which the next
         # round's join then reads, and the join lineage is truncated
-        # (SURVEY §4 O5). An eager checkpoint here would spend a second
-        # full pass per round just to materialize before the agg.
+        # (SURVEY §4 O5).
         new_labels = new_labels.localCheckpoint(eager=False)
         new_sum = _label_sum(new_labels)
         labels = new_labels
@@ -443,7 +354,7 @@ def connected_components(
         raise RuntimeError(f"connected_components: no fixpoint after {max_iter} rounds")
     if stats is not None:
         stats.update(rounds=rounds, round_seconds=round_seconds)
-    return labels
+    return labels.select("id", "component")
 
 
 def bipartite_components(
@@ -510,18 +421,12 @@ def bipartite_components(
     )
     from anti_money_laundering_spark.graph import Graph as _G
 
-    # join_rounds: inert under the frontier default (which is
-    # join-shaped and never builds a Union), kept as frontier=False
-    # INSURANCE — the legacy union form's constraint rewrite crashes
-    # on these checkpointed-LogicalRDD inputs (see connected_components
-    # docstring), so anyone flipping frontier off here must keep this
-    # flag. star/right_vertices are already distinct'd above (and
-    # unique), so the inner loop skips its own dedup shuffles.
+    # star/right_vertices are already distinct'd above (and unique),
+    # so the inner loop skips its own dedup shuffles.
     right_labels = connected_components(
         _G(right_vertices, star),
         max_iter=max_iter,
         stats=stats,
-        join_rounds=True,
         dedup_edges=False,
         dedup_vertices=False,
     ).withColumnRenamed("component", "attr_comp")

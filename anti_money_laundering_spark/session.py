@@ -29,6 +29,9 @@ for _v in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
 CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 CODEGEN_CACHE_ENTRIES = 4096
 
+#: directory holding the package, shipped to local Python workers
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_secret(scope: str, key: str, default: str | None = None) -> str:
     """Secrets access (SURVEY §2.1 S11). The reference reads its API
@@ -88,6 +91,13 @@ def get_spark(
         "spark.executorEnv.OPENBLAS_NUM_THREADS": os.environ.get("OPENBLAS_NUM_THREADS", "1"),
         "spark.executorEnv.OMP_NUM_THREADS": os.environ.get("OMP_NUM_THREADS", "1"),
         "spark.executorEnv.MKL_NUM_THREADS": os.environ.get("MKL_NUM_THREADS", "1"),
+        # Python workers that unpickle engine functions import the
+        # package; a driver that found it through sys.path (started
+        # outside the repository root, no PYTHONPATH) would leave them
+        # with ModuleNotFoundError. Spark adds this entry to the
+        # worker's PYTHONPATH. Cluster executors need the package
+        # installed (DEPLOY.md); this path only exists on the driver.
+        "spark.executorEnv.PYTHONPATH": PACKAGE_PARENT,
         # Generated-class cache, keyed by generated source. Spark's
         # default of 100 classes is smaller than one pass of either
         # perfbench workload (~400 and ~270 classes), so every pass

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -25,6 +26,22 @@ def spark():
         extra_conf={"spark.driver.memory": "8g"},
     )
     yield spark
+
+
+@pytest.fixture
+def force_loop(monkeypatch):
+    """Context manager under which every small-graph collapse gate
+    (``graph.components.SMALL_GRAPH_COLLAPSE_ROWS``) refuses, so CC,
+    Brandes and the densest peel run their distributed loops."""
+    from anti_money_laundering_spark.graph import components
+
+    @contextlib.contextmanager
+    def _loop():
+        with monkeypatch.context() as m:
+            m.setattr(components, "SMALL_GRAPH_COLLAPSE_ROWS", -1)
+            yield
+
+    return _loop
 
 
 @pytest.fixture(scope="session")

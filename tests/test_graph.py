@@ -48,64 +48,57 @@ def test_connected_components_chain_diameter(spark):
     assert set(cc.values()) == {1}
 
 
-def test_connected_components_long_chain_log_rounds(spark):
+def test_connected_components_long_chain_log_rounds(spark, force_loop):
     # pointer jumping: a 200-node chain must converge in O(log n)
     # rounds — max_iter=12 would never finish under plain propagation.
-    # collapse_rows=None so the LOOP is what this test exercises (the
-    # r14 small-graph collapse would solve the chain in one task).
+    # force_loop so the LOOP is what this test exercises (the r14
+    # small-graph collapse would solve the chain in one task).
     chain = [(i, i + 1) for i in range(1, 200)]
     gr = g(spark, chain)
-    cc = {
-        r.id: r.component
-        for r in gr.connected_components(max_iter=12, collapse_rows=None).collect()
-    }
+    with force_loop():
+        cc = {r.id: r.component for r in gr.connected_components(max_iter=12).collect()}
     assert set(cc.values()) == {1}
     assert len(cc) == 200
 
 
-def test_connected_components_raises_when_max_iter_runs_out(spark):
+def test_connected_components_raises_when_max_iter_runs_out(spark, force_loop):
     # 3 rounds cannot settle a 200-node chain: the loop must fail
     # loudly rather than return unconverged labels
     chain = [(i, i + 1) for i in range(1, 200)]
     gr = g(spark, chain)
-    with pytest.raises(RuntimeError, match="connected_components: no fixpoint after 3 rounds"):
-        gr.connected_components(max_iter=3, collapse_rows=None)
+    with force_loop(), pytest.raises(
+        RuntimeError, match="connected_components: no fixpoint after 3 rounds"
+    ):
+        gr.connected_components(max_iter=3)
 
 
-def test_connected_components_frontier_equals_legacy(spark):
-    """r13 optimization: delta (frontier) propagation must reproduce the
-    full-propagation loop exactly — same labels AND same round count
-    (the trajectories are provably identical; a diverging round count
-    would mean the frontier dropped a live message). The mixed shape
-    (chain + star + isolated vertices) makes the frontier actually
-    collapse over several rounds rather than staying full."""
+def test_connected_components_frontier_rounds_and_labels(spark, force_loop):
+    """r13 optimization: delta (frontier) propagation must reproduce
+    full re-propagation exactly — the same labels (here: the
+    collapse's, itself pinned to min-label semantics) AND the same
+    round count. The trajectories are provably identical, so a
+    diverging round count would mean the frontier dropped a live
+    message; 7 is what the full-propagation loop (since removed)
+    measured on this shape. The mixed shape (chain + star + isolated
+    vertices) makes the frontier actually shrink over several rounds
+    rather than staying full."""
     from anti_money_laundering_spark.graph.components import connected_components
 
     edges = [(i, i + 1) for i in range(1, 20)] + [(100, j) for j in range(101, 110)]
     gr = g(spark, edges, vertices=list(range(1, 21)) + list(range(100, 110)) + [999])
     st_f: dict = {}
-    st_l: dict = {}
-    got_f = {
-        r.id: r.component
-        for r in connected_components(
-            gr, stats=st_f, frontier=True, collapse_rows=None
-        ).collect()
-    }
-    got_l = {
-        r.id: r.component
-        for r in connected_components(
-            gr, stats=st_l, frontier=False, collapse_rows=None
-        ).collect()
-    }
-    assert got_f == got_l
-    assert st_f["rounds"] == st_l["rounds"]
+    with force_loop():
+        got_f = {r.id: r.component for r in connected_components(gr, stats=st_f).collect()}
+    got_c = {r.id: r.component for r in connected_components(gr).collect()}
+    assert got_f == got_c
+    assert st_f["rounds"] == 7, st_f
 
 
-def test_connected_components_collapse_equals_loops(spark):
+def test_connected_components_collapse_equals_loops(spark, force_loop):
     """r14 optimization: the small-graph single-task collapse (the
     default path for any graph under SMALL_GRAPH_COLLAPSE_ROWS) must
-    reproduce BOTH distributed loops' labels exactly on the same mixed
-    shape the frontier equality test uses (chain + star + isolated
+    reproduce the distributed loop's labels exactly on the same mixed
+    shape the frontier round-count test uses (chain + star + isolated
     vertex — multi-round propagation, pointer jumping, and the
     isolated-vertex left-join fold all engage), plus duplicate edges
     and both edge orientations (min-label is direction-insensitive)."""
@@ -123,36 +116,31 @@ def test_connected_components_collapse_equals_loops(spark):
         for r in connected_components(gr, stats=st_c).collect()
     }
     assert st_c.get("collapsed") is True and st_c["rounds"] == 0
-    got_f = {
-        r.id: r.component
-        for r in connected_components(gr, frontier=True, collapse_rows=None).collect()
-    }
-    got_l = {
-        r.id: r.component
-        for r in connected_components(gr, frontier=False, collapse_rows=None).collect()
-    }
-    assert got_c == got_f == got_l
+    st_f: dict = {}
+    with force_loop():
+        got_f = {r.id: r.component for r in connected_components(gr, stats=st_f).collect()}
+    assert "collapsed" not in st_f, st_f
+    assert got_c == got_f
     assert got_c[999] == 999 and got_c[20] == 1 and got_c[109] == 100
 
 
 def test_graph_validate_guard(spark):
-    """r14 (verdict item 8 / advice): the opt-in validate flag makes
-    contract-violating graphs fail loudly — the frontier fold and the
-    motif id-only fast path assume unique vertex ids and endpoint
-    closure, and silently diverge from the lenient legacy folds when
-    those are violated."""
+    """r14 (verdict item 8 / advice): ``Graph.validate`` makes
+    contract-violating graphs fail loudly — the CC frontier fold and
+    the motif id-only fast path assume unique vertex ids and endpoint
+    closure, and silently give other answers when those are
+    violated."""
     import pytest
 
     from anti_money_laundering_spark.graph import Graph
-    from anti_money_laundering_spark.graph.components import connected_components
 
     e = spark.createDataFrame([(1, 2)], "src long, dst long")
     dup_v = spark.createDataFrame([(1,), (1,), (2,)], "id long")
     with pytest.raises(ValueError, match="duplicate vertex id"):
-        connected_components(Graph(dup_v, e), validate=True)
+        Graph(dup_v, e).validate()
     open_v = spark.createDataFrame([(1,)], "id long")
     with pytest.raises(ValueError, match="endpoint closure"):
-        connected_components(Graph(open_v, e), validate=True)
+        Graph(open_v, e).validate()
     # a contract-satisfying graph passes and returns the graph
     ok_v = spark.createDataFrame([(1,), (2,)], "id long")
     assert Graph(ok_v, e).validate() is not None
@@ -328,11 +316,14 @@ def test_scc_two_cycles_one_bridge(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
 
 
-def test_bipartite_components_equals_generic(spark):
+def test_bipartite_components_equals_generic(spark, force_loop):
     """The right-projection fast path must reproduce the generic
     min-label loop exactly: chained stars (persons 1,2 share attr 101;
     2,3 share 102 -> one component), a separate island, and an
-    isolated vertex."""
+    isolated vertex. Both with the inner CC collapsed and with its
+    frontier loop forced: that loop runs over checkpointed inputs
+    carrying join-derived constraints, the shape that crashes a
+    Union-based loop (see connected_components)."""
     from anti_money_laundering_spark.graph import bipartite_components
 
     gr = g(
@@ -344,6 +335,11 @@ def test_bipartite_components_equals_generic(spark):
     generic = {r.id: r.component for r in gr.connected_components().collect()}
     assert fast == generic
     assert fast[999] == 999 and fast[3] == 1 and fast[8] == 7
+    stats: dict = {}
+    with force_loop():
+        looped = {r.id: r.component for r in bipartite_components(gr, stats=stats).collect()}
+    assert stats["rounds"] >= 1 and "collapsed" not in stats, stats
+    assert looped == generic
 
 
 def test_bipartite_components_equals_generic_on_identity_fixture(spark, sf_dir):
@@ -524,7 +520,7 @@ def test_k_core_and_bfs_empty_graph(spark):
     assert walks.count() == 2 * 3  # 2 vertices x steps 0..2
 
 
-def test_cc_hub_skew_bounded_rounds_and_correct(spark):
+def test_cc_hub_skew_bounded_rounds_and_correct(spark, force_loop):
     """Skew torture (r4 verdict item 5): one hub vertex carrying ~99%
     of all edges (degree 10k) with a 64-chain tail hanging off a spoke.
     The min-label loop must stay O(log diameter) — the hub cannot
@@ -541,9 +537,8 @@ def test_cc_hub_skew_bounded_rounds_and_correct(spark):
     edges = hub.union(chain).union(bridge)
     verts = edges.select(F.col("src").alias("id")).union(edges.select("dst")).distinct()
     stats: dict = {}
-    cc = connected_components(
-        Graph(verts, edges), max_iter=20, stats=stats, collapse_rows=None
-    )
+    with force_loop():
+        cc = connected_components(Graph(verts, edges), max_iter=20, stats=stats)
     comps = cc.select("component").distinct().collect()
     assert [r.component for r in comps] == [0]
     assert cc.count() == 10065
@@ -965,10 +960,10 @@ def test_edge_betweenness_equals_brandes(spark):
     assert got_c == {(0, 1): 3.0, (1, 2): 2.0, (2, 3): 1.0}
 
 
-def test_betweenness_collapse_equals_loop(spark):
+def test_betweenness_collapse_equals_loop(spark, force_loop):
     """The r14 single-task collapse (default, gated on |edges| x
     |landmarks|) and the distributed per-level loop
-    (``collapse_rows=None``) must agree on random multigraphs and
+    (under ``force_loop``) must agree on random multigraphs and
     shapes with ties/unreachable pockets — within float summation
     order (<=1e-9; measured divergence is ulp-scale, 12 orders under
     the round(6) surface both catalog queries emit). Keeps the loop
@@ -991,22 +986,24 @@ def test_betweenness_collapse_equals_loop(spark):
         g = Graph(v_df, e_df)
         sources = [0, 1, 2]
         fast = {r.id: r.betweenness for r in betweenness(g, sources).collect()}
-        slow = {r.id: r.betweenness for r in betweenness(g, sources, collapse_rows=None).collect()}
+        efast = {(r.src, r.dst): r.betweenness for r in edge_betweenness(g, sources).collect()}
+        with force_loop():
+            slow = {r.id: r.betweenness for r in betweenness(g, sources).collect()}
+            eslow = {
+                (r.src, r.dst): r.betweenness
+                for r in edge_betweenness(g, sources).collect()
+            }
         assert set(fast) == set(slow)
         assert all(abs(fast[v] - slow[v]) < 1e-9 for v in fast), seed
-        efast = {(r.src, r.dst): r.betweenness for r in edge_betweenness(g, sources).collect()}
-        eslow = {
-            (r.src, r.dst): r.betweenness
-            for r in edge_betweenness(g, sources, collapse_rows=None).collect()
-        }
         assert set(efast) == set(eslow)
         assert all(abs(efast[e] - eslow[e]) < 1e-9 for e in efast), seed
     # truncation guard raises eagerly on both paths
     chain = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "src long, dst long")
     v = chain.select(F.col("src").alias("id")).union(chain.select("dst")).distinct()
-    for rows in (None, 2_000_000):
-        with pytest.raises(RuntimeError, match="still expanding"):
-            betweenness(Graph(v, chain), [0], max_iter=2, collapse_rows=rows)
+    with pytest.raises(RuntimeError, match="still expanding"):
+        betweenness(Graph(v, chain), [0], max_iter=2)
+    with force_loop(), pytest.raises(RuntimeError, match="still expanding"):
+        betweenness(Graph(v, chain), [0], max_iter=2)
 
 
 def test_modularity_matches_hand_computation(spark):
@@ -1147,7 +1144,7 @@ def test_weighted_sssp_matches_python_bellman_ford(spark):
         weighted_sssp(g, [0], max_iter=0)
 
 
-def test_densest_peel_matches_python_simulation(spark):
+def test_densest_peel_matches_python_simulation(spark, force_loop):
     """Random graphs vs a direct python simulation of the parallel
     peel; a planted clique must dominate the best round's density."""
     import random
@@ -1185,9 +1182,8 @@ def test_densest_peel_matches_python_simulation(spark):
         # the r14 single-task collapse (default on small graphs) must be
         # BIT-equal to the distributed loop — integer counts + the same
         # python-float rho, so exact equality, not a tolerance
-        loop = densest_subgraph_peel(
-            Graph(verts, edges), eps=eps, max_rounds=6, collapse_rows=None
-        )
+        with force_loop():
+            loop = densest_subgraph_peel(Graph(verts, edges), eps=eps, max_rounds=6)
         assert got == loop, trial
         best_rho = max(r[3] for r in got)
         assert best_rho >= (15 / 6) / (1 + 1)  # clique density within approx factor

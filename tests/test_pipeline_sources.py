@@ -50,6 +50,20 @@ def test_blas_single_thread_contract(spark):
         assert shipped == os.environ["OPENBLAS_NUM_THREADS"]
 
 
+def test_session_ships_package_path_to_workers(spark):
+    """Python workers that unpickle engine functions must find the
+    package even when the driver was started outside the repository
+    root with no PYTHONPATH: get_spark ships the package's parent
+    directory, and Spark adds it to each local worker's PYTHONPATH."""
+    from anti_money_laundering_spark import session
+
+    assert os.path.isdir(os.path.join(session.PACKAGE_PARENT, "anti_money_laundering_spark"))
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.executorEnv.PYTHONPATH") == session.PACKAGE_PARENT
+    # the worker-launch environment PySpark builds from that conf
+    assert spark.sparkContext.environment["PYTHONPATH"] == session.PACKAGE_PARENT
+
+
 def test_save_table_overwrite_schema_change(spark, caplog):
     """The overwriteSchema contract the reference relies on (01:245):
     overwrite must replace data AND schema on the parquet fallback

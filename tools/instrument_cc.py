@@ -26,6 +26,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from anti_money_laundering_spark.graph import components  # noqa: E402
 from anti_money_laundering_spark.graph.components import connected_components  # noqa: E402
 from anti_money_laundering_spark.plans.fixture_graphs import identity_graph  # noqa: E402
 from anti_money_laundering_spark.session import get_spark  # noqa: E402
@@ -46,6 +47,10 @@ def _job_stage_counts(sc) -> tuple[int, int]:
 
 
 def main() -> None:
+    # this tool diagnoses the LOOP's per-round behavior; a budget no
+    # graph fits turns off the small-graph collapse that replaces the
+    # loop at fixture scale
+    components.SMALL_GRAPH_COLLAPSE_ROWS = -1
     spark = get_spark(app_name="cc_instrument")
     sc = spark.sparkContext
 
@@ -55,9 +60,7 @@ def main() -> None:
         stats: dict = {}
         t0 = time.perf_counter()
         g = identity_graph(spark, SF_DIR)
-        # collapse_rows=None: this tool diagnoses the LOOP's per-round
-        # behavior; the small-graph collapse replaces it at fixture scale
-        n = connected_components(g, stats=stats, collapse_rows=None).count()
+        n = connected_components(g, stats=stats).count()
         wall = round(time.perf_counter() - t0, 3)
         j1, s1 = _job_stage_counts(sc)
         rec = {

@@ -57,11 +57,7 @@ def main() -> int:
 
     stats: dict = {}
     t0 = time.perf_counter()
-    # join_rounds: range-derived synthetic inputs trip Catalyst's
-    # Union constraint rewrite at localCheckpoint (the documented
-    # key-not-found case in connected_components' docstring); the
-    # join+least formulation sidesteps the Union node entirely
-    cc = connected_components(g, max_iter=30, stats=stats, join_rounds=True)
+    cc = connected_components(g, max_iter=30, stats=stats)
     n_comp = cc.select("component").distinct().count()
     t_cc = time.perf_counter() - t0
     print(
