@@ -634,7 +634,6 @@ def profile_table(
     df: DataFrame,
     columns: list[str] | None = None,
     exact_distinct: bool = True,
-    per_column: bool = True,
 ) -> DataFrame:
     """Column-level data profile: one row per column with row count,
     non-null count, distinct count, and min/max (stringified) — the
@@ -642,93 +641,53 @@ def profile_table(
     (schema drift, null explosions, and key-cardinality checks all
     fall out of this one pass).
 
-    Two exact plans (r14 optimization round; guide §2.3 "aggregate
-    before you shuffle" — the A/B is in OPTIMIZATION_r14.md):
+    One independent two-level aggregation branch PER COLUMN (guide
+    §2.3 "aggregate before you shuffle"): groupBy the column's values
+    (partial map-side agg collapses each scan partition to its
+    distinct values), then fold counts/min/max from the value groups;
+    the branches union to the output rows. N parquet FOOTER-PRUNED
+    single-column scans run as parallel stages inside one job; each
+    branch shuffles only its column's distinct values. Measured 6.4x
+    faster than a single-aggregate expand plan on a 6-column orders
+    profile (r14, OPTIMIZATION_r14.md) — the expand's row
+    multiplication was the cost, not the scan count.
 
-    - ``per_column=True`` (default): one independent two-level
-      aggregation branch PER COLUMN — groupBy the column's values
-      (partial map-side agg collapses each scan partition to its
-      distinct values), then fold counts/min/max from the value groups;
-      the branches union to the output rows. N parquet FOOTER-PRUNED
-      single-column scans run as parallel stages inside one job; each
-      branch shuffles only its column's distinct values. Measured 6.4x
-      faster than the expand plan on a 6-column orders profile
-      (order-controlled warm pairs at sf0.1: 0.39 vs 2.46 s wall,
-      0.81 vs 3.60 CPU-s) — the expand's row multiplication was the
-      cost, not the scan count.
-    - ``per_column=False``: the former shape — a SINGLE global
-      aggregate over one scan (Catalyst's multi-distinct rewrite
-      expands rows x (N+1), one shuffle), then ``stack`` pivots the
-      1-row result driver-free. Wins only when the table is scanned
-      from a source where N scans cost more than an N-fold row expand
-      (e.g. an unsplittable row-oriented source; parquet is not that).
-
-    min/max are computed in the column's native type THEN cast to
-    string, so numeric columns order numerically. At scale set
-    ``exact_distinct=False`` to swap the exact distinct for HyperLogLog
-    partial aggregation (approx_count_distinct, ~2% error; honored by
-    both plans).
+    Column names are resolved as quoted identifiers, so names an
+    unfamiliar table may carry (``.``, backticks, quotes) profile
+    like any other. min/max are computed in the column's native type
+    THEN cast to string, so numeric columns order numerically. At
+    scale set ``exact_distinct=False`` to swap the exact distinct for
+    HyperLogLog partial aggregation (approx_count_distinct, ~2% error).
     """
-    cols = columns or df.columns
-    if per_column:
-        from functools import reduce
+    from functools import reduce
 
-        branches = []
-        for c in cols:
-            per = df.select(F.col(c).alias("__v"))
-            if exact_distinct:
-                grouped = per.groupBy("__v").agg(F.count(F.lit(1)).alias("__n"))
-                branch = grouped.agg(
-                    F.coalesce(F.sum("__n"), F.lit(0)).alias("n_rows"),
-                    F.coalesce(
-                        F.sum(F.when(F.col("__v").isNotNull(), F.col("__n"))),
-                        F.lit(0),
-                    ).alias("n_non_null"),
-                    F.count("__v").alias("n_distinct"),
-                    F.min("__v").cast("string").alias("min_value"),
-                    F.max("__v").cast("string").alias("max_value"),
-                )
-            else:
-                branch = per.agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.count("__v").alias("n_non_null"),
-                    F.approx_count_distinct("__v").alias("n_distinct"),
-                    F.min("__v").cast("string").alias("min_value"),
-                    F.max("__v").cast("string").alias("max_value"),
-                )
-            branches.append(branch.select(F.lit(c).alias("col_name"), "*"))
-        return reduce(lambda a, b: a.unionByName(b), branches).select(
-            "col_name", "n_rows", "n_non_null", "n_distinct", "min_value", "max_value"
-        )
-    nd = F.countDistinct if exact_distinct else F.approx_count_distinct
-    aggs = []
-    for c in cols:
-        aggs += [
-            F.count(F.col(c)).alias(f"__nn_{c}"),
-            nd(F.col(c)).alias(f"__nd_{c}"),
-            F.min(F.col(c)).cast("string").alias(f"__mn_{c}"),
-            F.max(F.col(c)).cast("string").alias(f"__mx_{c}"),
-        ]
-    row = df.agg(F.count(F.lit(1)).alias("__n"), *aggs)
-
-    # The stack expression is SQL text, so column names must be escaped
-    # for both contexts they appear in: '' inside the string literal,
-    # `` inside the backtick-quoted identifier — an "unfamiliar table"
-    # (this operator's whole purpose) can legally carry both characters.
-    def _lit(c: str) -> str:
-        return c.replace("'", "''")
-
-    def _ident(c: str) -> str:
-        return c.replace("`", "``")
-
-    stacked = ", ".join(
-        f"'{_lit(c)}', `__nn_{_ident(c)}`, `__nd_{_ident(c)}`, `__mn_{_ident(c)}`, `__mx_{_ident(c)}`"
-        for c in cols
+    branches = []
+    for c in columns or df.columns:
+        per = df.select(F.col("`" + c.replace("`", "``") + "`").alias("__v"))
+        if exact_distinct:
+            grouped = per.groupBy("__v").agg(F.count(F.lit(1)).alias("__n"))
+            branch = grouped.agg(
+                F.coalesce(F.sum("__n"), F.lit(0)).alias("n_rows"),
+                F.coalesce(
+                    F.sum(F.when(F.col("__v").isNotNull(), F.col("__n"))),
+                    F.lit(0),
+                ).alias("n_non_null"),
+                F.count("__v").alias("n_distinct"),
+                F.min("__v").cast("string").alias("min_value"),
+                F.max("__v").cast("string").alias("max_value"),
+            )
+        else:
+            branch = per.agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.count("__v").alias("n_non_null"),
+                F.approx_count_distinct("__v").alias("n_distinct"),
+                F.min("__v").cast("string").alias("min_value"),
+                F.max("__v").cast("string").alias("max_value"),
+            )
+        branches.append(branch.select(F.lit(c).alias("col_name"), "*"))
+    return reduce(lambda a, b: a.unionByName(b), branches).select(
+        "col_name", "n_rows", "n_non_null", "n_distinct", "min_value", "max_value"
     )
-    return row.selectExpr(
-        "__n as n_rows",
-        f"stack({len(cols)}, {stacked}) as (col_name, n_non_null, n_distinct, min_value, max_value)",
-    ).select("col_name", "n_rows", "n_non_null", "n_distinct", "min_value", "max_value")
 
 
 def expectations(
@@ -747,8 +706,8 @@ def expectations(
     aggregate. Rows where a rule evaluates to NULL count as violations
     (unknown is not a pass) via null-safe negation.
 
-    Returns (rule, n_violations) — stack-pivoted like
-    :func:`profile_table`, no driver collect.
+    Returns (rule, n_violations) — the one aggregate row is
+    stack-pivoted in the plan, no driver collect.
     """
     aggs = []
     names: list[str] = []

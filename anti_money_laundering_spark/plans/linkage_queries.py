@@ -67,17 +67,17 @@ _EM_ITERS = 10  # tol=0.0 on the Spark side => exactly this many iterations
 #: params) share the same blocking join and deterministic EM fit, so
 #: the pair materialization + pattern-histogram collect runs once per
 #: session (the same memo discipline as the LSH family in
-#: llm_queries). applicationId-keyed; dead contexts evicted per lookup.
+#: llm_queries). applicationId-keyed; dead contexts evicted per lookup
+#: by ``llm_queries._evict_dead_sessions``.
 _EM_SHARED: dict = {}
 
 
 def _shared_em(spark: SparkSession, sf_dir: str):
     from anti_money_laundering_spark.linkage import round_params
+    from anti_money_laundering_spark.plans.llm_queries import _app_id, _evict_dead_sessions
 
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _EM_SHARED if k[0] != app]:
-        del _EM_SHARED[k]
-    key = (app, sf_dir)
+    _evict_dead_sessions(spark)
+    key = (_app_id(spark), sf_dir)
     if key not in _EM_SHARED:
         cust = load_table(spark, sf_dir, "customer")
         comparisons = _comparisons()

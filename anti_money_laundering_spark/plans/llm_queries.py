@@ -333,6 +333,14 @@ def _app_id(spark: SparkSession) -> str:
     return spark.sparkContext.applicationId
 
 
+def _shared_memos() -> tuple[dict, ...]:
+    """Every per-(applicationId, sf_dir) derivation memo, the linkage
+    family's included."""
+    from anti_money_laundering_spark.plans import linkage_queries
+
+    return (_LSH_SHARED, _PAIRS_SHARED, _TFIDF_W_SHARED, linkage_queries._EM_SHARED)
+
+
 def clear_shared_memos() -> None:
     """Evict ALL per-session derivation memos (LSH state, verified
     pairs, TF-IDF weights, the linkage family's gamma table + EM fit)
@@ -344,12 +352,8 @@ def clear_shared_memos() -> None:
     checkpointed blocks, not the pipeline. The memos stay per-process
     and are rebuilt from source on the next lookup; nothing persists
     across runs."""
-    from anti_money_laundering_spark.plans import linkage_queries
-
-    _LSH_SHARED.clear()
-    _PAIRS_SHARED.clear()
-    _TFIDF_W_SHARED.clear()
-    linkage_queries._EM_SHARED.clear()
+    for memo in _shared_memos():
+        memo.clear()
 
 
 def _evict_dead_sessions(spark: SparkSession) -> None:
@@ -357,7 +361,7 @@ def _evict_dead_sessions(spark: SparkSession) -> None:
     a long-lived process that restarts Spark doesn't pin dead sessions
     and their checkpoint blocks forever. Called on EVERY memo lookup."""
     app = _app_id(spark)
-    for memo in (_LSH_SHARED, _PAIRS_SHARED, _TFIDF_W_SHARED):
+    for memo in _shared_memos():
         for k in [k for k in memo if k[0] != app]:
             del memo[k]
 

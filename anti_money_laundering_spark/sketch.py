@@ -7,15 +7,14 @@ formulation shuffles almost nothing:
 
 - **heavy_hitters** — exact phi-heavy-hitters in two passes: a
   candidate-generation pass whose shuffle is bounded by a fixed
-  summary size (two-hash count-min bucket histogram by default, all
-  JVM codegen; per-partition Misra-Gries summaries as the mergeable /
-  streaming-friendly alternative), then an exact recount restricted
-  to the candidates. Output is EXACT (identical to GROUP BY ...
-  HAVING count > phi * total) because the recount counts candidates
-  exactly and both candidate filters guarantee a superset of the true
-  heavy hitters. A plain GROUP BY stays faster while the distinct-key
-  set shuffles comfortably — the sketch paths exist for when it
-  doesn't (billions of keys, executor-memory-bound hash maps).
+  summary size (a two-hash count-min bucket histogram, all JVM
+  codegen), then an exact recount restricted to the candidates.
+  Output is EXACT (identical to GROUP BY ... HAVING count > phi *
+  total) because the recount counts candidates exactly and the
+  candidate filter guarantees a superset of the true heavy hitters.
+  A plain GROUP BY stays faster while the distinct-key set shuffles
+  comfortably — the sketch path exists for when it doesn't (billions
+  of keys, executor-memory-bound hash maps).
 
 The per-day/per-month HLL sketch rollup (the other reaggregatable
 summary) composes directly from Spark's built-in ``hll_sketch_agg`` /
@@ -24,28 +23,16 @@ summary) composes directly from Spark's built-in ``hll_sketch_agg`` /
 
 from __future__ import annotations
 
-import math
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["bloom_filter", "bloom_might_contain", "bloom_semi_join", "heavy_hitters"]
-
-#: Candidate sets above this size stop being "tiny broadcast side" —
-#: at that point the plain GROUP BY is the right plan, so refuse
-#: loudly instead of silently degrading (same policy as the vector
-#: module's all-pairs guard).
-_MAX_CAPACITY = 1_000_000
 
 
 def heavy_hitters(
     df: DataFrame,
     cols: list[str],
     phi: float,
-    capacity: int | None = None,
-    method: str = "bucket",
     num_buckets: int = 1 << 16,
 ) -> DataFrame:
     """All key tuples occurring in MORE than ``phi`` of ``df``'s rows,
@@ -61,105 +48,19 @@ def heavy_hitters(
     Output columns: ``cols`` + ``cnt`` (exact count) + ``total``
     (total rows scanned, the HAVING denominator).
 
-    Two candidate-generation strategies, both yielding a guaranteed
-    SUPERSET of the true hitters (the exact recount then makes the
-    final answer identical either way):
-
-    - ``method="bucket"`` (default): a two-hash count-min filter, all
-      JVM codegen. One scan histograms ``xxhash64 % num_buckets``
-      under two independent hashes (map-side combine caps the shuffle
-      at 2*num_buckets rows per partition); a key whose true count
-      exceeds phi*n forces BOTH its buckets over the threshold, so the
-      recount runs only on keys both of whose buckets are heavy —
-      false candidates fall off quadratically in the collision rate.
-      Measured at 20M rows / 1M distinct keys on local[32] this is the
-      faster path (the Misra-Gries variant pays a full Arrow transfer
-      of the key column into Python).
-    - ``method="mg"``: per-partition Misra-Gries summaries of size
-      ``capacity`` (default ceil(1/phi)) via mapInPandas, merged with
-      the mergeable-summaries truncation (Agarwal et al., PODS 2012):
-      any key with frequency > n/(capacity+1) survives. This is the
-      bounded-memory summary form — the one you'd persist or maintain
-      incrementally — but its candidate pass crosses the Arrow
-      boundary, so prefer "bucket" for one-shot batch queries.
+    Candidates come from a two-hash count-min filter, all JVM codegen.
+    One scan histograms ``xxhash64 % num_buckets`` under two
+    independent hashes (map-side combine caps the shuffle at
+    2*num_buckets rows per partition); a key whose true count exceeds
+    phi*n forces BOTH its buckets over the threshold, so the recount
+    runs only on keys both of whose buckets are heavy — false
+    candidates fall off quadratically in the collision rate. The
+    candidates are a guaranteed SUPERSET of the true hitters, and the
+    exact recount makes the answer exact. The data is scanned exactly
+    twice.
     """
     if not 0.0 < phi < 1.0:
         raise ValueError(f"heavy_hitters: phi must be in (0, 1), got {phi}")
-    if method == "bucket":
-        return _heavy_hitters_bucket(df, cols, phi, num_buckets)
-    if method != "mg":
-        raise ValueError(f"heavy_hitters: unknown method {method!r} (bucket|mg)")
-    m = capacity if capacity is not None else math.ceil(1.0 / phi)
-    if m < math.ceil(1.0 / phi):
-        raise ValueError(
-            f"heavy_hitters: capacity {m} < ceil(1/phi) = {math.ceil(1.0 / phi)} "
-            "breaks the superset guarantee"
-        )
-    if m > _MAX_CAPACITY:
-        raise ValueError(
-            f"heavy_hitters: capacity {m} > {_MAX_CAPACITY}; at that candidate "
-            "scale use a plain groupBy — the summary no longer broadcasts"
-        )
-    keys = df.select(*cols)
-
-    def mg_candidates(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Misra-Gries over the partition, merged batch-at-a-time:
-        # add the batch's exact counts, then if over capacity subtract
-        # the (m+1)-th largest weight and drop non-positives — the
-        # mergeable-summaries truncation, vectorized in pandas.
-        acc = pd.Series(dtype="int64")
-        for pdf in batches:
-            vc = pdf.groupby(cols, sort=False, dropna=True).size()
-            acc = acc.add(vc, fill_value=0) if len(acc) else vc.astype("int64")
-            if len(acc) > m:
-                thresh = acc.nlargest(m + 1).iloc[-1]
-                acc = acc[acc > thresh] - thresh
-        if len(acc) == 0:
-            yield pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
-        else:
-            out = acc.index.to_frame(index=False)
-            out.columns = cols
-            yield out
-
-    candidates = keys.mapInPandas(mg_candidates, schema=keys.schema).dropDuplicates()
-
-    # Recount pass: candidate keys keep their identity, everything else
-    # folds into one NULL-key group, so per-partition partial
-    # aggregation emits <= m + 1 groups no matter the key cardinality.
-    marked = df.join(
-        F.broadcast(candidates.withColumn("__hh", F.lit(True))), on=cols, how="left"
-    )
-    bucketed = marked.select(
-        *[F.when(F.col("__hh"), F.col(c)).alias(c) for c in cols]
-    )
-    # Total rows = sum over ALL recount groups (the NULL-key fold group
-    # included), folded into the counts frame by an unpartitioned
-    # window (r14, guide §2.4): the former separate ``counts.agg(sum)``
-    # branch re-executed the corpus scan + candidate join + agg subtree
-    # for its own broadcast. The window's single reducer sees at most
-    # candidates + 1 rows (the recount's NULL-fold bounds group count
-    # by construction), never the key cardinality.
-    from pyspark.sql.window import Window
-
-    counts = bucketed.groupBy(*cols).agg(F.count(F.lit(1)).alias("cnt"))
-    counts = counts.withColumn(
-        "total", F.sum("cnt").over(Window.partitionBy())
-    )
-    keys_present = F.lit(True)
-    for c in cols:
-        keys_present = keys_present & F.col(c).isNotNull()
-    return counts.filter(keys_present).filter(
-        F.col("cnt") > F.lit(phi) * F.col("total")
-    )
-
-
-def _heavy_hitters_bucket(
-    df: DataFrame, cols: list[str], phi: float, num_buckets: int
-) -> DataFrame:
-    """Two-hash count-min candidate filter + exact recount (see
-    heavy_hitters). Scans the data exactly twice, shuffles at most
-    2*num_buckets histogram rows per partition then only candidate
-    keys; every expression is JVM codegen."""
     if num_buckets < 2:
         raise ValueError(f"heavy_hitters: num_buckets must be >= 2, got {num_buckets}")
 

@@ -35,8 +35,6 @@ __all__ = [
     "merge_stream_sink",
     "stateful_event_transitions",
     "stateful_user_totals",
-    "stateful_user_totals_v2",
-    "transform_with_state_available",
     "velocity_breach_stream",
     "run_stream_to_memory",
     "write_events_replay",
@@ -805,85 +803,4 @@ def stateful_event_transitions(events: DataFrame) -> DataFrame:
 
     return events.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def transform_with_state_available() -> bool:
-    """Spark 4.1's transformWithState Python runner needs the protobuf
-    wheel (its driver↔worker state protocol is proto-serialized);
-    absent protobuf, the streaming runner crashes at START (not at
-    import), so gate BEFORE building the query. Mirrors the
-    torch/delta optional-dependency gates."""
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no 'google' namespace package at all
-        return False
-
-
-def stateful_user_totals_v2(events: DataFrame, alert_threshold: float = 1000.0) -> DataFrame:
-    """The velocity accumulator on Spark 4.1's ``transformWithState``
-    API (StatefulProcessor + typed value state) — the successor to
-    ``stateful_user_totals``'s applyInPandasWithState face, with the
-    same observable contract: per-user lifetime (total_value,
-    n_events, alert).
-
-    Why both exist: applyInPandasWithState is the stable API this
-    engine's attested path uses; transformWithState adds typed state
-    handles, timers, and composite state types — the forward surface a
-    production migration lands on. State remains one tiny tuple per
-    user in the state store (RocksDB provider required by the API),
-    updated Arrow-batch-at-a-time.
-
-    Raises RuntimeError when the protobuf dependency is missing
-    (:func:`transform_with_state_available`); batch inputs take the
-    same groupBy aggregate as v1 (identical semantics, no state)."""
-    if not events.isStreaming:
-        return (
-            events.groupBy("user_id")
-            .agg(F.sum("value").alias("total_value"), F.count(F.lit(1)).alias("n_events"))
-            .withColumn("alert", F.col("total_value") >= alert_threshold)
-        )
-    if not transform_with_state_available():
-        raise RuntimeError(
-            "transformWithState needs the protobuf package; use "
-            "stateful_user_totals (applyInPandasWithState) instead"
-        )
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    threshold = alert_threshold
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", "total double, n bigint")
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: ARG002
-            existing = self._state.get()
-            total, n = existing if existing else (0.0, 0)
-            for pdf in rows:
-                total += float(pdf["value"].sum())
-                n += len(pdf)
-            self._state.update((total, n))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "total_value": [total],
-                    "n_events": [n],
-                    "alert": [total >= threshold],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_Totals(),
-        outputStructType="user_id long, total_value double, n_events bigint, alert boolean",
-        outputMode="Update",
-        timeMode="None",
     )

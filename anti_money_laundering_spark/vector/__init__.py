@@ -9,8 +9,9 @@ Two paths:
   correct at any scale but quadratic; the oracle for the ANN path.
 - **LSH-bucketed ANN** — random-hyperplane signatures (Charikar 2002):
   b deterministic pseudo-random hyperplanes hash each vector to a
-  b-bit bucket; probing compares only vectors sharing a bucket (with
-  multi-probe over Hamming-1 neighbors to recover boundary misses).
+  b-bit bucket; probing compares only vectors sharing a bucket or
+  one of its Hamming-1 neighbors (multi-probe, recovers boundary
+  misses).
   Bucket join = one shuffle on the signature; at 100 TB this is the
   path — brute force is the correctness check.
 
@@ -385,16 +386,15 @@ def ann_lsh_topk(
     k: int = 5,
     num_planes: int = 4,
     num_tables: int = 16,
-    multi_probe: bool = True,
     max_broadcast_queries: int = LSH_BROADCAST_MAX_QUERIES,
 ) -> DataFrame:
     """Approximate top-k: ``num_tables`` independent hash tables of
-    ``num_planes`` hyperplanes each; candidates share a bucket in ANY
-    table (multi-probe additionally probes every Hamming-1 bucket per
-    table); exact cosine + rank over the candidate union.
+    ``num_planes`` hyperplanes each; candidates share a bucket, or
+    one of its Hamming-1 neighbors (multi-probe), in ANY table; exact
+    cosine + rank over the candidate union.
 
     Recall math: with per-bit agreement p, one table catches a pair
-    w.p. ~p^planes (+ planes·p^(planes-1)(1-p) multi-probed); L tables
+    w.p. ~p^planes + planes·p^(planes-1)(1-p); L tables
     make it 1-(1-hit)^L — tune planes to corpus size (bucket
     occupancy) and tables to recall.
 
@@ -431,11 +431,11 @@ def ann_lsh_topk(
     )
     if len(q_rows) <= max_broadcast_queries:
         return _ann_lsh_topk_broadcast(
-            q_rows, vectors, id_col, vec_col, k, num_planes, num_tables, multi_probe,
+            q_rows, vectors, id_col, vec_col, k, num_planes, num_tables,
             id_type=dict(queries.dtypes)[id_col],
         )
     return _ann_lsh_topk_shuffle(
-        queries, vectors, id_col, vec_col, k, num_planes, num_tables, multi_probe
+        queries, vectors, id_col, vec_col, k, num_planes, num_tables
     )
 
 
@@ -447,7 +447,6 @@ def _ann_lsh_topk_broadcast(
     k: int,
     num_planes: int,
     num_tables: int,
-    multi_probe: bool,
     id_type: str,
     seed: int = 0,
 ) -> DataFrame:
@@ -457,9 +456,7 @@ def _ann_lsh_topk_broadcast(
     nq, dim = q_mat.shape
     planes = _hyperplanes(num_planes, num_tables, dim, seed)
     sigs = _signatures(q_mat, planes, num_planes, num_tables)  # (nq, T)
-    probe_sigs = [sigs]
-    if multi_probe:
-        probe_sigs += [sigs ^ (1 << h) for h in range(num_planes)]
+    probe_sigs = [sigs] + [sigs ^ (1 << h) for h in range(num_planes)]
     probe_arr = np.stack(probe_sigs, axis=2)  # (nq, T, n_probe)
     # Per-table bucket -> sorted array of probing query indices. Total
     # size is nq * T * n_probe int32 entries — bounded by the query
@@ -561,7 +558,6 @@ def _ann_lsh_topk_shuffle(
     k: int,
     num_planes: int,
     num_tables: int,
-    multi_probe: bool,
 ) -> DataFrame:
     """Symmetric shuffle LSH top-k (see :func:`ann_lsh_topk`): both
     sides explode onto (tbl, bucket); candidate generation is one
@@ -578,24 +574,20 @@ def _ann_lsh_topk_shuffle(
         F.col(id_col).alias("neighbor_id"),
         F.posexplode(bucketer(F.col(vec_col))).alias("tbl", "bucket"),
     )
+    # Probe the exact bucket plus every Hamming-1 neighbor bucket.
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.posexplode(bucketer(F.col(vec_col))).alias("tbl", "__sig"),
+    ).select(
+        "query_id",
+        "tbl",
+        F.explode(
+            F.expr(
+                f"array_union(array(__sig), transform(sequence(0, {num_planes - 1}), "
+                f"h -> __sig ^ shiftleft(1L, h)))"
+            )
+        ).alias("bucket"),
     )
-    if multi_probe:
-        # Probe the exact bucket plus every Hamming-1 neighbor bucket.
-        q = q.select(
-            "query_id",
-            "tbl",
-            F.explode(
-                F.expr(
-                    f"array_union(array(__sig), transform(sequence(0, {num_planes - 1}), "
-                    f"h -> __sig ^ shiftleft(1L, h)))"
-                )
-            ).alias("bucket"),
-        )
-    else:
-        q = q.withColumnRenamed("__sig", "bucket")
     candidates = (
         q.join(v, ["tbl", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))

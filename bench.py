@@ -22,8 +22,9 @@ round-over-round delta exceeds the run's own noise floor.
 
 Protocol v3 (round 7 — r6 verdict item 7): each query also reports
 ``cpu`` — the PROCESS-TREE CPU seconds consumed during the timed run
-(python driver + JVM + Arrow/pandas workers, live descendants via
-their /proc stat and reaped ones via their parents' cutime/cstime).
+(python driver + JVM + Arrow/pandas workers, the sum of
+``perfbench/meter.py``'s per-kind split: live descendants via their
+/proc stat and reaped ones via their parents' cutime/cstime).
 Wall time on a shared host confounds the engine's work with neighbor
 load; CPU time is what the engine itself burned and is the
 noise-robust half of the dual metric (a wall regression with flat CPU
@@ -38,45 +39,11 @@ import statistics
 import sys
 import time
 
-_TICKS = os.sysconf("SC_CLK_TCK")
-
-
-def _tree_cpu_seconds() -> float:
-    """CPU seconds (user+sys) of this process and every descendant:
-    live descendants from their own /proc/<pid>/stat utime+stime,
-    already-reaped ones via their parents' cutime+cstime (consistent
-    across snapshots: a worker's time moves from its own stat into the
-    parent's cumulative fields when it exits, so deltas never lose or
-    double-count a short-lived Arrow worker)."""
-    procs: dict[int, tuple[int, tuple[int, ...]]] = {}
-    for entry in os.listdir("/proc"):
-        if not entry.isdigit():
-            continue
-        try:
-            with open(f"/proc/{entry}/stat") as f:
-                raw = f.read()
-        except OSError:
-            continue  # raced a process exit
-        # comm field is parenthesized and may contain spaces
-        rest = raw[raw.rindex(")") + 2 :].split()
-        # rest[0]=state, rest[1]=ppid, rest[11..14]=utime stime cutime cstime
-        procs[int(entry)] = (int(rest[1]), tuple(int(x) for x in rest[11:15]))
-    children: dict[int, list[int]] = {}
-    for pid, (ppid, _) in procs.items():
-        children.setdefault(ppid, []).append(pid)
-    ticks, stack = 0, [os.getpid()]
-    while stack:
-        pid = stack.pop()
-        if pid not in procs:
-            continue
-        ticks += sum(procs[pid][1])
-        stack.extend(children.get(pid, ()))
-    return ticks / _TICKS
-
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from anti_money_laundering_spark.plans.catalog import get_catalog  # noqa: E402
 from anti_money_laundering_spark.session import get_spark  # noqa: E402
+from perfbench.meter import tree_cpu_by_kind  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PASSES = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "5"))
@@ -121,11 +88,11 @@ def main() -> None:
             # query; description is driver-side metadata — no effect on
             # the timed work.
             spark.sparkContext.setJobDescription(f"bench: {name}")
-            c0 = _tree_cpu_seconds()
+            c0 = sum(tree_cpu_by_kind().values())
             t0 = time.perf_counter()
             q.fn(spark, SF_DIR).count()
             samples[name].append(time.perf_counter() - t0)
-            cpu_samples[name].append(_tree_cpu_seconds() - c0)
+            cpu_samples[name].append(sum(tree_cpu_by_kind().values()) - c0)
     spark.sparkContext.setJobDescription(None)
 
     timings = {n: round(statistics.median(s), 3) for n, s in samples.items()}

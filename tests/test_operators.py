@@ -355,6 +355,14 @@ def test_profile_table_counts_nulls_and_approx_path(spark):
     approx = {r["col_name"]: r for r in profile_table(df, exact_distinct=False).collect()}
     assert approx["s"]["n_non_null"] == 3
     assert 1 <= approx["s"]["n_distinct"] <= 3
+    # names an unfamiliar table may carry: a dot, a backtick, a quote
+    odd = spark.createDataFrame([(1, "x", 2.0), (1, None, None)], ["a.b", "a`b", "a'b"])
+    for exact in (True, False):
+        prof = {r["col_name"]: r for r in profile_table(odd, exact_distinct=exact).collect()}
+        assert set(prof) == {"a.b", "a`b", "a'b"}
+        assert [prof[c]["n_non_null"] for c in ("a.b", "a`b", "a'b")] == [2, 1, 1]
+        assert [prof[c]["n_distinct"] for c in ("a.b", "a`b", "a'b")] == [1, 1, 1]
+        assert prof["a`b"]["min_value"] == "x" and prof["a'b"]["max_value"] == "2.0"
 
 
 def test_winsorized_mean_ignores_nulls(spark):

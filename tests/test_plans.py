@@ -234,8 +234,8 @@ def test_bm25_stats_and_df_broadcast(spark, sf_dir):
 
 
 def test_profile_per_column_pruned_branches(spark, sf_dir):
-    # r14 shape (operators.profile_table per_column=True, the measured
-    # 6.4x win over the single-aggregate Expand plan): one two-level
+    # r14 shape (operators.profile_table, the measured 6.4x win over
+    # the single-aggregate Expand plan): one two-level
     # aggregation branch per profiled column, each over its own
     # SINGLE-COLUMN pruned scan, unioned to rows — no Expand row
     # multiplication, no driver collect. The scan count equals the

@@ -1,5 +1,6 @@
 """Session-memo hygiene for the shared LSH/pair tables
-(plans/llm_queries.py): keys are (applicationId, sf_dir) — unique per
+(plans/llm_queries.py) and the linkage gamma table + EM fit
+(plans/linkage_queries.py): keys are (applicationId, sf_dir) — unique per
 SparkContext, unlike a recycled id(spark) address — and every lookup
 evicts entries from other (dead) applications, so a fresh context can
 never be served DataFrames bound to a stopped one."""
@@ -14,6 +15,8 @@ def test_lookup_evicts_dead_app_entries(spark, sf_dir):
     # context's — exactly what a stopped-and-replaced session leaves
     # behind (under id(spark) keying a recycled address could ALIAS the
     # live key; applicationId keys cannot collide across contexts).
+    from anti_money_laundering_spark.plans import linkage_queries
+
     sentinel = object()
     lq._LSH_SHARED[("application_dead_123", sf_dir)] = sentinel
     lq._PAIRS_SHARED[("application_dead_123", sf_dir)] = sentinel
@@ -26,6 +29,13 @@ def test_lookup_evicts_dead_app_entries(spark, sf_dir):
     # and the live entry is the one returned (memo hit on second call)
     assert lq._shared_verified_pairs(spark, sf_dir) is pairs
     assert pairs is not sentinel
+
+    # the linkage family's memo is evicted by its own lookup too
+    linkage_queries._EM_SHARED[("application_dead_123", sf_dir)] = sentinel
+    em = linkage_queries._shared_em(spark, sf_dir)
+    assert all(k[0] == live for k in linkage_queries._EM_SHARED)
+    assert linkage_queries._shared_em(spark, sf_dir) is em
+    assert em is not sentinel
 
 
 def test_app_id_is_context_scoped(spark):

@@ -1,5 +1,5 @@
-"""Unit/property tests for the r7-continuation operators: Misra-Gries
-heavy hitters (sketch.py), the interval-overlap join and the
+"""Unit/property tests for the r7-continuation operators: heavy
+hitters (sketch.py), the interval-overlap join and the
 edit-distance (SymSpell) join (operators/)."""
 
 from __future__ import annotations
@@ -35,8 +35,7 @@ def _lev(a: str, b: str) -> int:
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.parametrize("method", ["bucket", "mg"])
-def test_heavy_hitters_equals_group_by_having_on_zipf(spark, method):
+def test_heavy_hitters_equals_group_by_having_on_zipf(spark):
     rng = random.Random(7)
     rows = [(f"k{min(int(1 / rng.random()), 400)}",) for _ in range(30000)]
     rows += [(None,)] * 50  # null keys count toward total, never hit
@@ -46,26 +45,25 @@ def test_heavy_hitters_equals_group_by_having_on_zipf(spark, method):
     for phi in (0.005, 0.02):
         got = {
             r.key: (r.cnt, r.total)
-            for r in heavy_hitters(df, ["key"], phi, method=method).collect()
+            for r in heavy_hitters(df, ["key"], phi).collect()
         }
         want = {k: v for k, v in exact.items() if v > phi * n}
         assert set(got) == set(want)
         assert all(got[k] == (want[k], n) for k in want)
 
 
-@pytest.mark.parametrize("method", ["bucket", "mg"])
-def test_heavy_hitters_multi_column_and_uniform_edge(spark, method):
+def test_heavy_hitters_multi_column_and_uniform_edge(spark):
     rows = [(f"k{i % 50}", i % 3) for i in range(6000)]
     df = spark.createDataFrame(rows, "key string, g int").repartition(5)
     exact = Counter(rows)
     got = {
         (r.key, r.g): r.cnt
-        for r in heavy_hitters(df, ["key", "g"], 0.005, method=method).collect()
+        for r in heavy_hitters(df, ["key", "g"], 0.005).collect()
     }
     want = {k: v for k, v in exact.items() if v > 0.005 * len(rows)}
     assert got == want
     # uniform distribution under a high phi: no hitters, empty result
-    assert heavy_hitters(df, ["key", "g"], 0.2, method=method).count() == 0
+    assert heavy_hitters(df, ["key", "g"], 0.2).count() == 0
 
 
 def test_heavy_hitters_bucket_collision_pressure(spark):
@@ -77,33 +75,15 @@ def test_heavy_hitters_bucket_collision_pressure(spark):
     df = spark.createDataFrame(rows, "key string").repartition(6)
     got = {
         r.key: r.cnt
-        for r in heavy_hitters(df, ["key"], 0.1, method="bucket", num_buckets=4).collect()
+        for r in heavy_hitters(df, ["key"], 0.1, num_buckets=4).collect()
     }
     assert got == {"hot": 1500}
-
-
-def test_heavy_hitters_minimal_capacity_still_exact(spark):
-    """The superset guarantee must hold at the tight default capacity
-    ceil(1/phi) even with an adversarial near-uniform tail."""
-    rng = random.Random(11)
-    rows = [("hot",)] * 2000 + [(f"t{rng.randrange(900)}",) for _ in range(8000)]
-    rng.shuffle(rows)
-    df = spark.createDataFrame(rows, "key string").repartition(7)
-    phi = 0.1  # capacity m = 10 << 900 tail keys
-    got = {r.key: r.cnt for r in heavy_hitters(df, ["key"], phi, method="mg").collect()}
-    assert got == {"hot": 2000}
 
 
 def test_heavy_hitters_guards(spark):
     df = spark.range(5).select(F.col("id").cast("string").alias("k"))
     with pytest.raises(ValueError, match="phi"):
         heavy_hitters(df, ["k"], 0.0)
-    with pytest.raises(ValueError, match="superset"):
-        heavy_hitters(df, ["k"], 0.01, capacity=10, method="mg")
-    with pytest.raises(ValueError, match="plain groupBy"):
-        heavy_hitters(df, ["k"], 1e-8, method="mg")
-    with pytest.raises(ValueError, match="unknown method"):
-        heavy_hitters(df, ["k"], 0.1, method="topk")
     with pytest.raises(ValueError, match="num_buckets"):
         heavy_hitters(df, ["k"], 0.1, num_buckets=1)
 

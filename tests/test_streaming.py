@@ -400,65 +400,6 @@ def test_jsonl_stream_sink_batch_scoped_atomic_commits(spark):
     assert batches == sorted(batches)
 
 
-def test_stateful_totals_v2_batch_face_and_gate(spark, sf_dir):
-    """transformWithState successor: batch face equals v1's aggregate;
-    the streaming face is gated on protobuf (absent in this container
-    -> the builder must refuse with the named fallback, not crash the
-    stream at runtime)."""
-    from anti_money_laundering_spark.streaming import (
-        stateful_user_totals,
-        stateful_user_totals_v2,
-        transform_with_state_available,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select("user_id", "value")
-    a = {r.user_id: (r.total_value, r.n_events, r.alert)
-         for r in stateful_user_totals(ev).collect()}
-    b = {r.user_id: (r.total_value, r.n_events, r.alert)
-         for r in stateful_user_totals_v2(ev).collect()}
-    assert a == b
-    if not transform_with_state_available():
-        import pytest as _pt
-
-        stream = spark.readStream.format("rate").load().selectExpr(
-            "value as user_id", "cast(value as double) as value"
-        )
-        with _pt.raises(RuntimeError, match="protobuf"):
-            stateful_user_totals_v2(stream)
-
-
-@pytest.mark.skipif(
-    not __import__(
-        "anti_money_laundering_spark.streaming", fromlist=["streaming"]
-    ).transform_with_state_available(),
-    reason="transformWithState needs protobuf (not in this container)",
-)
-def test_stateful_totals_v2_stream_parity(spark, sf_dir, replay_dir):
-    """When protobuf IS present: replaying the events through the
-    transformWithState face must land on the batch aggregate (same
-    parity contract as test_stateful_totals_parity)."""
-    from anti_money_laundering_spark.streaming import stateful_user_totals_v2
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = stateful_user_totals_v2(
-        read_events_stream(spark, replay_dir).select("user_id", "value")
-    )
-    got_rows = run_stream_to_memory(spark, stream, "tws_totals", output_mode="update")
-    last = {}
-    for r in got_rows:
-        last[r.user_id] = (r.total_value, r.n_events)
-    ev = load_table(spark, sf_dir, "events")
-    exp = {
-        r.user_id: (r.total_value, r.n_events)
-        for r in stateful_user_totals_v2(ev.select("user_id", "value")).collect()
-    }
-    for k, v in exp.items():
-        assert k in last and abs(last[k][0] - v[0]) < 1e-6 and last[k][1] == v[1]
-
-
 def test_stream_passthrough_pairs_parity(spark, sf_dir, replay_dir):
     """The pass-through screen's streaming face replayed over 4
     micro-batches must equal its batch face: inflow and outflow legs

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from anti_money_laundering_spark.sources import load_table
 from anti_money_laundering_spark.vector import (
+    LSH_BROADCAST_MAX_QUERIES,
     ann_ivf_topk,
     ann_lsh_topk,
     cosine_similarity,
@@ -87,14 +88,19 @@ def test_lsh_topk_equals_bruteforce(spark, sf_dir):
     ann_lsh_topk DuckDB oracle (exact top-k SQL) relies on. Run at
     every SF the driver can (SKILL.md pre-driver checklist); if
     fixture drift ever slips a borderline neighbor past the buckets,
-    this fails locally before the driver's correctness gate does."""
+    this fails locally before the driver's correctness gate does.
+    Both physical shapes run: the broadcast probe map (the default at
+    this query count) and the symmetric shuffle (forced by
+    ``max_broadcast_queries=0``)."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("label") == 0)
     exact = {(r.query_id, r.neighbor_id, r.rank)
              for r in cosine_topk_blas(queries, emb, k=5).collect()}
-    approx = {(r.query_id, r.neighbor_id, r.rank)
-              for r in ann_lsh_topk(queries, emb, k=5).collect()}
-    assert approx == exact
+    for max_broadcast in (LSH_BROADCAST_MAX_QUERIES, 0):
+        approx = {(r.query_id, r.neighbor_id, r.rank)
+                  for r in ann_lsh_topk(queries, emb, k=5,
+                                        max_broadcast_queries=max_broadcast).collect()}
+        assert approx == exact, max_broadcast
 
 
 def test_ivf_recall_against_bruteforce(spark, sf_dir):

@@ -19,9 +19,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _tree_cpu_seconds  # noqa: E402  (reuse the protocol's CPU meter)
 from anti_money_laundering_spark.plans.catalog import get_catalog  # noqa: E402
 from anti_money_laundering_spark.session import get_spark  # noqa: E402
+from perfbench.meter import tree_cpu_by_kind  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ONLY = set(sys.argv[1:])  # optional: sweep just the named queries
@@ -41,9 +41,9 @@ def main() -> None:
             print(json.dumps({"query": name, "err": str(e)[:200]}), flush=True)
             continue
         spark.sparkContext.setJobDescription(f"sweep-timed: {name}")
-        c0, t0 = _tree_cpu_seconds(), time.perf_counter()
+        c0, t0 = sum(tree_cpu_by_kind().values()), time.perf_counter()
         q.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        wall, cpu = time.perf_counter() - t0, _tree_cpu_seconds() - c0
+        wall, cpu = time.perf_counter() - t0, sum(tree_cpu_by_kind().values()) - c0
         results[name] = (round(wall, 3), round(cpu, 3))
         print(json.dumps({"query": name, "wall": results[name][0], "cpu": results[name][1]}), flush=True)
     spark.sparkContext.setJobDescription(None)

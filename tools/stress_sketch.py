@@ -3,9 +3,9 @@
 
 - heavy_hitters over 20M rows / ~1M distinct Zipf keys — measures the
   bounded-memory claim: the candidate set (and thus the recount
-  shuffle) must stay ~capacity-sized while a plain GROUP BY would
-  shuffle the full million-key dictionary. Prints both paths' times
-  and the candidate count.
+  shuffle) must stay small while a plain GROUP BY would shuffle the
+  full million-key dictionary. Prints the bucket filter's time next
+  to the plain GROUP BY's, both with the same answer.
 - interval_overlap_join over ~2M x 2M synthetic intervals — the
   bucketized equi-join must stay linear-ish in output size, never the
   per-key cartesian.
@@ -44,17 +44,15 @@ def main() -> int:
     # --- heavy hitters: Zipf-ish via reciprocal of a uniform hash ----
     # key = floor(1/u) capped at 1M distinct; the head key covers ~50%
     # of mass scaled down, tail is ~uniform — the adversarial shape for
-    # a fixed-capacity summary.
+    # a fixed-size summary.
     u = (F.pmod(F.xxhash64("id"), F.lit(1_000_000_003)) + 1) / 1_000_000_004.0
     keys = spark.range(n).select(
         F.concat(F.lit("k"), F.least(F.floor(1.0 / u), F.lit(1_000_000)).cast("long").cast("string")).alias("key")
     )
-    phi = 1e-4  # capacity 10k
-    results = {}
-    for method in ("bucket", "mg"):
-        t0 = time.time()
-        results[method] = heavy_hitters(keys, ["key"], phi=phi, method=method).count()
-        results[f"t_{method}"] = time.time() - t0
+    phi = 1e-4
+    t0 = time.time()
+    hitters = heavy_hitters(keys, ["key"], phi=phi).count()
+    t_hh = time.time() - t0
     t0 = time.time()
     exact = (
         keys.groupBy("key")
@@ -63,15 +61,14 @@ def main() -> int:
         .count()
     )
     t_gb = time.time() - t0
-    assert results["bucket"] == results["mg"] == exact, (results, exact)
+    assert hitters == exact, (hitters, exact)
     print(
         f"heavy_hitters[zipf-1M-keys]: {n} rows, phi={phi} -> {exact} hitters; "
-        f"bucket {results['t_bucket']:.1f}s / mg {results['t_mg']:.1f}s / "
-        f"plain groupBy+HAVING {t_gb:.1f}s (all same answer)"
+        f"bucket {t_hh:.1f}s / plain groupBy+HAVING {t_gb:.1f}s (same answer)"
     )
 
     # High-cardinality regime: ~all keys unique, 3 hot keys carrying
-    # 0.1% of rows each — the case the sketch paths exist for, where a
+    # 0.1% of rows each — the case the sketch path exists for, where a
     # plain GROUP BY must shuffle every distinct key.
     wide = spark.range(n).select(
         F.when(
@@ -81,19 +78,16 @@ def main() -> int:
         .otherwise(F.concat(F.lit("u"), F.col("id").cast("string")))
         .alias("key")
     )
-    wide_res = {}
-    for method in ("bucket", "mg"):
-        t0 = time.time()
-        wide_res[method] = heavy_hitters(wide, ["key"], phi=1e-4, method=method).count()
-        wide_res[f"t_{method}"] = time.time() - t0
+    t0 = time.time()
+    wide_hitters = heavy_hitters(wide, ["key"], phi=1e-4).count()
+    t_hh2 = time.time() - t0
     t0 = time.time()
     wide_exact = wide.groupBy("key").count().filter(F.col("count") > 1e-4 * n).count()
     t_gb2 = time.time() - t0
-    assert wide_res["bucket"] == wide_res["mg"] == wide_exact, (wide_res, wide_exact)
+    assert wide_hitters == wide_exact, (wide_hitters, wide_exact)
     print(
         f"heavy_hitters[~{n}-distinct]: {wide_exact} hitters; "
-        f"bucket {wide_res['t_bucket']:.1f}s / mg {wide_res['t_mg']:.1f}s / "
-        f"plain groupBy+HAVING {t_gb2:.1f}s"
+        f"bucket {t_hh2:.1f}s / plain groupBy+HAVING {t_gb2:.1f}s"
     )
 
     # --- interval overlap ------------------------------------------
