@@ -32,6 +32,12 @@ CODEGEN_CACHE_ENTRIES = 4096
 #: directory holding the package, shipped to local Python workers
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+#: Structured Streaming's checkpoint I/O (see ``_local_checkpoint_manager``)
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+
 
 def get_secret(scope: str, key: str, default: str | None = None) -> str:
     """Secrets access (SURVEY §2.1 S11). The reference reads its API
@@ -155,9 +161,36 @@ def get_spark(
                 "generated classes. Set it when the session is built",
                 stacklevel=2,
             )
+        _local_checkpoint_manager(active)
         return active
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _local_checkpoint_manager(spark)
     return spark
+
+
+def _local_checkpoint_manager(spark: SparkSession) -> None:
+    """Run Structured Streaming's checkpoint I/O (offset and commit
+    logs, state-store delta and checksum files) through Hadoop's
+    FileSystem API when the session's default file system is local.
+
+    Spark's default manager goes through FileContext, whose rename
+    checks the destination's link status. Without a native libhadoop
+    (the pyspark wheel ships none) Hadoop's local file system answers
+    that check by running ``readlink``, 4 times per rename; with the
+    ``chmod`` of each create, a trigger of the coordination screen on
+    4 state partitions started about 200 processes. The
+    FileSystem-based manager runs no ``readlink``: it renames after an
+    ``exists`` check, the same check-then-rename(2) the FileContext
+    path does on a local disk, and still refuses to overwrite a
+    committed batch. Cluster file systems keep FileContext: HDFS
+    refuses an overwriting rename on the server, which a client-side
+    check cannot. A value the caller set, at build time or later,
+    wins. Runtime-settable: queries started after this call use it."""
+    if spark.conf.get(CHECKPOINT_MANAGER_CONF, None) is not None:
+        return
+    default_fs = spark._jsparkSession.sessionState().newHadoopConf().get("fs.defaultFS")
+    if default_fs.startswith("file:"):
+        spark.conf.set(CHECKPOINT_MANAGER_CONF, FS_CHECKPOINT_MANAGER)

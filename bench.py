@@ -44,6 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from anti_money_laundering_spark.plans.catalog import get_catalog  # noqa: E402
 from anti_money_laundering_spark.session import get_spark  # noqa: E402
 from perfbench.meter import tree_cpu_by_kind  # noqa: E402
+from perfbench.run import calibrate  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PASSES = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "5"))
@@ -62,6 +63,12 @@ def main() -> None:
     spark = get_spark(app_name="aml_bench")
     catalog = get_catalog()
     headline = {n: q for n, q in catalog.items() if q.headline}
+    # Host-speed readings (perfbench's fixed-work Spark job) at the start
+    # and end of the run, so a reader can tell a slow host from slow
+    # code. The first call compiles the job's plan and is not kept.
+    cores = spark.sparkContext.defaultParallelism
+    calibrate(spark, cores)
+    calib_start = calibrate(spark, cores)
 
     for _ in range(WARMUPS):
         for name, q in headline.items():
@@ -94,6 +101,7 @@ def main() -> None:
             samples[name].append(time.perf_counter() - t0)
             cpu_samples[name].append(sum(tree_cpu_by_kind().values()) - c0)
     spark.sparkContext.setJobDescription(None)
+    calib_end = calibrate(spark, cores)
 
     timings = {n: round(statistics.median(s), 3) for n, s in samples.items()}
     cpu = {n: round(statistics.median(s), 3) for n, s in cpu_samples.items()}
@@ -137,6 +145,7 @@ def main() -> None:
         "total_cpu_s": round(sum(cpu.values()), 3),
         "cold_first_pass": cold_first,
         "protocol": protocol,
+        "calib_sec": {"start": round(calib_start, 3), "end": round(calib_end, 3)},
     }
     full_record = dict(line_record, dispersion=dispersion)
     sidecar = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LAST.json")

@@ -64,6 +64,63 @@ def test_session_ships_package_path_to_workers(spark):
     assert spark.sparkContext.environment["PYTHONPATH"] == session.PACKAGE_PARENT
 
 
+def _checkpoint_manager(spark, path):
+    """The manager a streaming query started now would write ``path``'s
+    checkpoint through."""
+    jvm = spark._jvm
+    return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+
+
+def test_session_local_checkpoints_use_filesystem_manager(spark, tmp_path):
+    """On the local default file system get_spark routes streaming
+    checkpoint I/O through the FileSystem-based manager (no shell
+    spawns per rename); a value the caller set wins, on the reuse path
+    and on any later get_spark call."""
+    from anti_money_laundering_spark import session
+
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    assert hconf.get("fs.defaultFS").startswith("file:")
+    assert spark.conf.get(session.CHECKPOINT_MANAGER_CONF) == session.FS_CHECKPOINT_MANAGER
+    fm = _checkpoint_manager(spark, tmp_path.as_uri())
+    assert fm.getClass().getName() == session.FS_CHECKPOINT_MANAGER
+
+    file_context = session.FS_CHECKPOINT_MANAGER.replace("FileSystemBased", "FileContextBased")
+    try:
+        session.get_spark(extra_conf={session.CHECKPOINT_MANAGER_CONF: file_context})
+        assert spark.conf.get(session.CHECKPOINT_MANAGER_CONF) == file_context
+        session.get_spark()  # the value now in the session is the caller's too
+        assert spark.conf.get(session.CHECKPOINT_MANAGER_CONF) == file_context
+        assert _checkpoint_manager(spark, tmp_path.as_uri()).getClass().getName() == file_context
+    finally:
+        spark.conf.set(session.CHECKPOINT_MANAGER_CONF, session.FS_CHECKPOINT_MANAGER)
+
+
+def test_filesystem_checkpoint_manager_refuses_overwrite(spark, tmp_path):
+    """The offset and commit logs rely on createAtomic(path,
+    overwriteIfPossible=False) refusing to replace a committed batch
+    file: a second writer of the same path must fail on close and
+    leave the first writer's bytes in place."""
+    from py4j.protocol import Py4JJavaError
+
+    from anti_money_laundering_spark import session
+
+    fm = _checkpoint_manager(spark, tmp_path.as_uri())
+    assert fm.getClass().getName() == session.FS_CHECKPOINT_MANAGER
+    committed = spark._jvm.org.apache.hadoop.fs.Path((tmp_path / "0").as_uri())
+    first = fm.createAtomic(committed, False)
+    first.write(1)
+    first.close()
+    second = fm.createAtomic(committed, False)
+    second.write(2)
+    with pytest.raises(Py4JJavaError) as err:
+        second.close()
+    already_exists = spark._jvm.java.lang.Class.forName("org.apache.hadoop.fs.FileAlreadyExistsException")
+    assert already_exists.isInstance(err.value.java_exception)
+    assert (tmp_path / "0").read_bytes() == b"\x01"
+
+
 def test_save_table_overwrite_schema_change(spark, caplog):
     """The overwriteSchema contract the reference relies on (01:245):
     overwrite must replace data AND schema on the parquet fallback

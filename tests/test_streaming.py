@@ -703,6 +703,80 @@ def test_stream_coordinated_amounts_hand_case(spark):
     assert got == {(95000, "2024-03-01"): 3}
 
 
+def test_stream_coordinated_amounts_restart_parity(spark, sf_dir, tmp_path):
+    """Checkpoint reload: the coordination screen run as two
+    ``availableNow`` queries on ONE checkpoint (replay files 0-2, then
+    files 3-5 added and the query restarted) must emit, across both
+    runs, exactly what one uninterrupted run over all six emits. The
+    second run only gets there by reloading the first run's dedup and
+    window state, its offsets and its commits from the checkpoint.
+    ``min_senders=1`` emits every closed (cents, day) cell with its
+    sender count, so a day left open by the first run and finished by
+    the second shows any state lost in between; the fixture's
+    three-sender cells are too few at small scale to show it."""
+    import shutil
+
+    from anti_money_laundering_spark.streaming import (
+        coordinated_amounts_stream,
+        write_events_replay,
+    )
+
+    full = write_events_replay(load_table(spark, sf_dir, "events"), n_files=6, path=str(tmp_path / "full"))
+    # the file source replays in modification-time order; copy2 keeps it
+    files = sorted(
+        (os.path.join(full, f) for f in os.listdir(full) if f.endswith(".parquet")),
+        key=os.path.getmtime,
+    )
+    assert len(files) == 6
+    cols = ["cents", "day", "n_senders"]
+
+    def run(src, checkpoint, batch_ids):
+        emitted = []
+
+        def collect(batch_df, batch_id):
+            batch_ids.append(batch_id)
+            emitted.extend(_rows(batch_df, cols))
+
+        stream = coordinated_amounts_stream(read_events_stream(spark, str(src)), min_senders=1)
+        (
+            stream.writeStream.foreachBatch(collect)
+            .outputMode("append")
+            .option("checkpointLocation", str(checkpoint))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        return emitted
+
+    staged, fresh = tmp_path / "staged", tmp_path / "fresh"
+    staged.mkdir()
+    fresh.mkdir()
+    first_ids, second_ids = [], []
+    for f in files[:3]:
+        shutil.copy2(f, staged)
+    first = run(staged, tmp_path / "checkpoint", first_ids)
+    for f in files[3:]:
+        shutil.copy2(f, staged)
+        shutil.copy2(f, fresh)
+    second = run(staged, tmp_path / "checkpoint", second_ids)
+
+    whole = _rows(
+        run_stream_to_memory(
+            coordinated_amounts_stream(read_events_stream(spark, full), min_senders=1),
+            "t_coord_whole",
+            output_mode="append",
+        ),
+        cols,
+    )
+    assert first and second
+    assert sorted(first + second) == whole
+    # the restart resumed the batch sequence the first run committed
+    assert min(second_ids) == max(first_ids) + 1
+    # control: files 3-5 on a fresh checkpoint, without the first run's
+    # state, do not complete the cells the first run left open
+    assert sorted(first + run(fresh, tmp_path / "fresh_checkpoint", [])) != whole
+
+
 def test_stream_coordinated_sliding_parity(spark, sf_dir, replay_dir):
     """The sliding-grid coordination screen's streaming face (explode
     into both offset 24h grids -> watermark on the window-start
